@@ -39,11 +39,6 @@ def main() -> None:
                     choices=["bloom", "cuckoo"],
                     help="URL-seen sidecar: bloom, or the deletable cuckoo "
                          "(recrawl TTL forgets keys in place)")
-    ap.add_argument("--filter-probe", default="broadcast",
-                    choices=["broadcast", "store"],
-                    help="'store' probes per-bucket filter files after a "
-                         "pmod(url_key,P) repartition — bounded executor "
-                         "memory at 10^10 seen keys")
     ap.add_argument("--discovery-fanout", type=int, default=0,
                     help=">0: fetched pages emit this many outlinks "
                          "(synthetic S2 stand-in)")
@@ -72,7 +67,6 @@ def main() -> None:
                       top_k=args.top_k, salts=args.salts,
                       epoch_budget_ms=args.epoch_budget_ms,
                       filter_kind=args.filter_kind,
-                      filter_probe=args.filter_probe,
                       discovery_fanout=args.discovery_fanout)
 
     if eng.last_epoch() == 0:

@@ -1,4 +1,4 @@
-"""URL-seen dedup: Bloom pre-filter + exact LEFT ANTI join (J1).
+"""URL-seen dedup: partitioned Bloom/cuckoo filter store + exact key segments (J1).
 
 Reference semantics (/root/reference/src/newsutils/pipelines.py:74-95): a
 per-day in-memory ``set`` of short_links, lazily hydrated from the sink —
@@ -11,23 +11,22 @@ bucketed state table and runs membership as a two-phase filter:
   fast path: a Bloom/cuckoo filter built from the seen keys rejects the
   overwhelmingly-common definitely-new URLs without shuffling the state
   table. Spark 4 does not expose ``bloom_filter_agg`` to SQL, so filters
-  are built distributed (numpy, vectorized splitmix64 mixing) and probed
-  with Arrow-batched pandas UDFs. The filter state is PARTITIONED by
-  ``bucket = pmod(url_key, P)`` (``PartitionedFilter`` +
-  ``build_partitioned``): every bucket's table is built executor-side from
-  only its keys (one narrow shuffle; the driver never sees a key) and is
-  individually capped, so capacity scales by adding buckets instead of
-  degrading fpp — no single bitmap ever exceeds ~32 MB. Probing is either
-  a broadcast of the bucket dict (fine to ~10^9 keys) or, beyond that,
-  ``split_by_filter_store``: per-bucket ``.npz`` files in shared storage,
-  the batch repartitioned on bucket, each task lazily loading only its own
-  buckets — executor memory bounded by buckets-per-task at any seen-set
+  are built distributed (numpy, vectorized splitmix64 mixing). The filter
+  state is PARTITIONED by ``bucket = pmod(url_key, P)`` and lives in a
+  ``FilterStore`` directory: ``build_partitioned`` builds every bucket's
+  table executor-side from only its keys (one narrow shuffle; the driver
+  never sees a key or a filter byte), each individually capped so capacity
+  scales by adding buckets instead of degrading fpp — no single bitmap
+  ever exceeds ~32 MB. ``tag_by_filter_store`` probes by repartitioning
+  the batch on bucket so each task lazily loads only its own buckets'
+  files — executor memory bounded by buckets-per-task at any seen-set
   size (the 10^10 path the north rule names).
 
-  slow path: only the Bloom *maybe-hits* (|batch|·fpp + true dupes) take
-  the exact LEFT ANTI join against the state table. Bloom filters have no
-  false negatives, so the two-phase result equals the plain anti-join
-  (property-tested in tests/test_dedup.py).
+  slow path: only the filter's *maybe-hits* (|batch|·fpp + true dupes) are
+  resolved exactly, by mmap'd searchsorted against the store's sorted
+  per-bucket key segments. Neither filter kind has false negatives, so the
+  two-phase result equals the plain LEFT ANTI join ``exact_new_urls``
+  (tested in tests/test_dedup.py and, engine-wide, tests/test_invariants.py).
 """
 
 from __future__ import annotations
@@ -38,7 +37,6 @@ import os
 import uuid
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -194,28 +192,6 @@ class PyCuckoo:
         return deleted
 
 
-def build_bloom(seen: DataFrame, key: str = "url_key",
-                expected: int | None = None, fpp: float = 0.01) -> PyBloom | None:
-    """Distributed build: per-partition bitmaps, OR-reduced to the driver."""
-    if expected is None:
-        expected = seen.count()
-    if expected == 0:
-        return None
-    m_items, m_fpp = expected, fpp
-
-    def part_bitmap(rows):
-        bf = PyBloom(m_items, m_fpp)
-        keys = np.fromiter((r[0] for r in rows), dtype=np.int64)
-        if len(keys):
-            bf.add_many(keys)
-        yield bf.bits
-
-    bits = seen.select(key).rdd.mapPartitions(part_bitmap).reduce(np.bitwise_or)
-    bf = PyBloom(m_items, m_fpp)
-    bf.bits = bits
-    return bf
-
-
 def _cuckoo_from_keys(keys: np.ndarray, expected: int,
                       max_doublings: int = 6) -> PyCuckoo:
     """Build a cuckoo filter that holds EVERY key: double capacity until
@@ -232,113 +208,36 @@ def _cuckoo_from_keys(keys: np.ndarray, expected: int,
         f"cuckoo build failed at capacity {cap} for {len(keys)} keys")
 
 
-def build_cuckoo(seen: DataFrame, key: str = "url_key",
-                 expected: int | None = None) -> PyCuckoo | None:
-    """Single-table cuckoo build (small seen sets / tests). Collects keys to
-    the driver — use ``build_partitioned(kind='cuckoo')`` beyond ~10^6 keys:
-    it builds per-bucket tables executor-side and never funnels the key set
-    through the driver."""
-    if expected is None:
-        expected = seen.count()
-    if expected == 0:
-        return None
-    keys = seen.select(key).toPandas()[key].to_numpy(dtype=np.int64)
-    if not len(keys):
-        return PyCuckoo(expected)
-    return _cuckoo_from_keys(keys, expected)
-
-
 # ---------------------------------------------------------------------------
 # bucketed (partitioned) filters — the 10^10-key scale path
 
+# design capacity of a bucket that first receives keys through an
+# incremental insert (store_apply_keys) rather than the bulk build
+NEW_BUCKET_ITEMS = 65_536
+
+
 class PartitionedFilter:
-    """URL-seen membership filter partitioned by ``bucket = key mod P``.
+    """Driver-side metadata of a FilterStore partitioned by
+    ``bucket = key mod P``: the layout plus per-bucket insert counters.
 
-    Each bucket holds an independent PyBloom/PyCuckoo over only its keys, so
-    no single bitmap ever exceeds ``cap_per_bucket`` — the bucket count
-    scales with the seen set instead of the fpp silently degrading past a
-    fixed cap (the round-1 weakness: one driver bitmap hard-capped at 50M).
-    At cluster scale the per-bucket tables live in a FilterStore and probe
-    tasks load only their own buckets; in-memory probing routes each key to
-    its bucket vectorized (np.unique over the batch's buckets)."""
+    Each bucket's PyBloom/PyCuckoo lives only in the store (built and
+    mutated executor-side) and covers only its own keys, so no single
+    bitmap ever exceeds ``cap_per_bucket`` — the bucket count scales with
+    the seen set instead of the fpp silently degrading past a fixed cap.
+    The driver keeps counters to decide when a rebuild is due."""
 
-    def __init__(self, buckets: int, kind: str = "bloom",
-                 cap_per_bucket: int = 25_000_000, fpp: float = 0.01,
-                 new_bucket_items: int = 65_536):
+    def __init__(self, buckets: int, kind: str = "bloom"):
         self.buckets = int(buckets)
         self.kind = kind
-        self.cap_per_bucket = int(cap_per_bucket)
-        self.fpp = fpp
-        self.new_bucket_items = int(new_bucket_items)
-        self.filters: dict[int, PyBloom | PyCuckoo] = {}
         self.inserted: dict[int, int] = {}
         self.capacity: dict[int, int] = {}  # per-bucket design n_items
         self.build_rss_mb = 0.0  # max builder-task peak RSS (evidence)
-
-    def _new_filter(self, bv: int):
-        self.capacity[bv] = self.new_bucket_items
-        if self.kind == "cuckoo":
-            return PyCuckoo(self.new_bucket_items)
-        return PyBloom(self.new_bucket_items, self.fpp)
-
-    def contains_many(self, keys: np.ndarray) -> np.ndarray:
-        keys = np.asarray(keys, dtype=np.int64)
-        out = np.zeros(len(keys), dtype=bool)
-        b = keys % self.buckets
-        for bv in np.unique(b):
-            f = self.filters.get(int(bv))
-            if f is None:
-                continue  # empty bucket: definitely new
-            m = b == bv
-            out[m] = f.contains_many(keys[m])
-        return out
-
-    def add_many(self, keys: np.ndarray) -> int:
-        """Route incremental inserts per bucket. Returns the number of
-        FAILED cuckoo inserts — a failed insert means the filter now lacks
-        a seen key (false-negative risk), so the caller must discard the
-        filter and rebuild from the state table before the next probe
-        (CrawlEngine does exactly that). Bloom inserts never fail; capacity
-        overrun surfaces via ``overfilled()`` instead."""
-        keys = np.asarray(keys, dtype=np.int64)
-        failed = 0
-        b = keys % self.buckets
-        for bv in np.unique(b):
-            bv = int(bv)
-            sub = keys[b == bv]
-            f = self.filters.get(bv)
-            if f is None:
-                f = self.filters[bv] = self._new_filter(bv)
-                self.inserted[bv] = 0
-            failed += f.add_many(sub) if isinstance(f, PyCuckoo) else (f.add_many(sub) or 0)
-            self.inserted[bv] = self.inserted.get(bv, 0) + len(sub)
-        return failed
-
-    def delete_many(self, keys: np.ndarray) -> int:
-        """Remove keys (cuckoo buckets only — the deletable variant's whole
-        point: recrawl TTL without a rebuild). Bloom buckets cannot delete;
-        the caller must discard and rebuild instead. Returns #deleted."""
-        keys = np.asarray(keys, dtype=np.int64)
-        deleted = 0
-        b = keys % self.buckets
-        for bv in np.unique(b):
-            bv = int(bv)
-            f = self.filters.get(bv)
-            if isinstance(f, PyCuckoo):
-                sub = keys[b == bv]
-                d = f.delete_many(sub)
-                deleted += d
-                self.inserted[bv] = max(0, self.inserted.get(bv, 0) - d)
-        return deleted
-
-    def n_inserted(self) -> int:
-        return sum(self.inserted.values())
 
     def overfilled(self) -> bool:
         """Any bucket past its own design capacity (fpp degraded / cuckoo
         near full) → the owner should rebuild from the state table with
         more buckets."""
-        return any(n > self.capacity.get(bv, self.new_bucket_items)
+        return any(n > self.capacity.get(bv, NEW_BUCKET_ITEMS)
                    for bv, n in self.inserted.items())
 
 
@@ -350,32 +249,29 @@ def pick_buckets(expected: int, cap_per_bucket: int = 25_000_000) -> int:
     return max(1, int(_m.ceil(2 * max(expected, 1) / cap_per_bucket)))
 
 
-def build_partitioned(seen: DataFrame, key: str = "url_key",
+def build_partitioned(seen: DataFrame, store_path: str, key: str = "url_key",
                       kind: str = "bloom", expected: int | None = None,
                       buckets: int | None = None,
                       cap_per_bucket: int = 25_000_000,
-                      fpp: float = 0.01,
-                      collect_to_driver: bool = True,
-                      store_path: str | None = None) -> PartitionedFilter | None:
-    """Distributed build of a PartitionedFilter: repartition the seen keys
-    by ``pmod(key, P)`` (one narrow ~16 B/row shuffle, UNCAPPED — one
-    partition per bucket so per-task memory is bounded by cap_per_bucket
-    regardless of P), build every bucket's filter executor-side inside
-    ``mapInArrow`` — keys stream through as Arrow batches and accumulate as
-    per-bucket numpy chunks (8 B/key, never boxed Python ints; the round-2
-    build buffered rows in ``defaultdict(list)`` at ~28 B/key and capped the
-    shuffle at 256 partitions, which OOMs at the 10^10-key north-rule
-    extreme: 800 buckets / 256 tasks ≈ 78M boxed ints per task).
+                      fpp: float = 0.01) -> PartitionedFilter | None:
+    """Distributed build of a FilterStore at ``store_path``: repartition the
+    seen keys by ``pmod(key, P)`` (one narrow ~16 B/row shuffle, UNCAPPED —
+    one partition per bucket so per-task memory is bounded by
+    cap_per_bucket regardless of P), build every bucket's filter
+    executor-side inside ``mapInArrow`` — keys stream through as Arrow
+    batches and accumulate as per-bucket numpy chunks (8 B/key, never boxed
+    Python ints; the round-2 build buffered rows in ``defaultdict(list)`` at
+    ~28 B/key and capped the shuffle at 256 partitions, which OOMs at the
+    10^10-key north-rule extreme: 800 buckets / 256 tasks ≈ 78M boxed ints
+    per task).
 
-    Each emitted row carries the builder task's peak RSS (``rss_mb``) so
-    tests can assert the fixed per-task memory budget directly.
-
-    With ``store_path`` set, each task writes its buckets' ``.npz`` files
-    straight into the FilterStore and ships only a tiny manifest row (no
-    blob) — the driver never holds filter bytes at all, which is the 10^10
-    path: 800 buckets x 32 MB would otherwise be ~25 GB of driver heap.
-    ``collect_to_driver=False`` then skips blob reassembly and returns a
-    metadata-only PartitionedFilter (probe via ``split_by_filter_store``).
+    Each task writes its buckets' ``.npz`` filter files and exact key
+    segments straight into the store and ships only a tiny manifest row —
+    the driver never holds filter bytes (800 buckets x 32 MB would be
+    ~25 GB of driver heap at 10^10 keys) and gets back a metadata-only
+    PartitionedFilter (probe via ``tag_by_filter_store``). Each manifest
+    row carries the build task's peak RSS (``rss_mb``) so tests can
+    assert the fixed per-task memory budget directly.
     """
     if expected is None:
         expected = seen.count()
@@ -384,9 +280,7 @@ def build_partitioned(seen: DataFrame, key: str = "url_key",
     if buckets is None:
         buckets = pick_buckets(expected, cap_per_bucket)
     P, knd, f_fpp = int(buckets), kind, fpp
-    cap = int(cap_per_bucket)
     s_path = store_path
-    ship_blob = collect_to_driver
 
     # 2x headroom over the even-split load for incremental epoch inserts
     exp_per_bucket = max(2 * expected // P, 1024)
@@ -401,10 +295,6 @@ def build_partitioned(seen: DataFrame, key: str = "url_key",
 
     out_schema = T.StructType([
         T.StructField("bv", T.IntegerType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("size", T.LongType()),
-        T.StructField("n_hash", T.IntegerType()),
-        T.StructField("blob", T.BinaryType()),
         T.StructField("n", T.LongType()),
         T.StructField("rss_mb", T.DoubleType()),
     ])
@@ -430,68 +320,35 @@ def build_partitioned(seen: DataFrame, key: str = "url_key",
                 sl = ks_s[bounds[i]:bounds[i + 1]].astype(np.int64, copy=True)
                 chunks.setdefault(int(bv), []).append(sl)
 
-        def emit(bv, k_kind, size, n_hash, payload, n):
-            rss = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024.0
-            return pa.RecordBatch.from_pydict(
-                {"bv": [bv], "kind": [k_kind], "size": [size],
-                 "n_hash": [n_hash], "blob": [payload], "n": [n],
-                 "rss_mb": [rss]},
-                schema=pa.schema([
-                    pa.field("bv", pa.int32()),
-                    pa.field("kind", pa.string()),
-                    pa.field("size", pa.int64()),
-                    pa.field("n_hash", pa.int32()),
-                    pa.field("blob", pa.binary()),
-                    pa.field("n", pa.int64()),
-                    pa.field("rss_mb", pa.float64()),
-                ]))
-
+        st = FilterStore(s_path)
         for bv, parts in chunks.items():
             arr = parts[0] if len(parts) == 1 else np.concatenate(parts)
             parts.clear()
             if knd == "cuckoo":
                 f = _cuckoo_from_keys(arr, max(len(arr) * 2, exp_per_bucket))
-                size, n_hash, blob = f.n_buckets, 0, f.table.tobytes()
             else:
                 f = PyBloom(max(len(arr) * 2, exp_per_bucket), f_fpp)
                 f.add_many(arr)
-                # ship (m, k) verbatim: probe mixing must use the exact
-                # build-time parameters or present keys read as absent
-                size, n_hash, blob = f.m, f.k, f.bits.tobytes()
-            if s_path is not None:
-                st = FilterStore(s_path)
-                st.save_bucket_raw(bv, knd, f)
-                # exact key segment 0 (committed-state snapshot) — the
-                # store probe resolves filter maybes against these instead
-                # of re-scanning the url_seen table every epoch
-                st.save_key_segment(bv, 0, arr)
-            yield emit(bv, knd, size, n_hash,
-                       blob if ship_blob else b"", len(arr))
+            st.save_bucket_raw(bv, knd, f)
+            # exact key segment 0 (committed-state snapshot) — the store
+            # probe resolves filter maybes against these instead of
+            # re-scanning the url_seen table every epoch
+            st.save_key_segment(bv, 0, arr)
+            rss = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024.0
+            yield pa.RecordBatch.from_pydict(
+                {"bv": [bv], "n": [len(arr)], "rss_mb": [rss]},
+                schema=pa.schema([pa.field("bv", pa.int32()),
+                                  pa.field("n", pa.int64()),
+                                  pa.field("rss_mb", pa.float64())]))
 
-    built = keyed.mapInArrow(part_build, out_schema)
-    pf = PartitionedFilter(P, kind=kind, cap_per_bucket=cap, fpp=f_fpp)
-    pf.exact_keys = store_path is not None
-    rows = built.drop("blob").collect() if not collect_to_driver \
-        else built.collect()
+    rows = keyed.mapInArrow(part_build, out_schema).collect()
+    pf = PartitionedFilter(P, kind=kind)
     for r in rows:
         bv, n = int(r["bv"]), int(r["n"])
-        if collect_to_driver:
-            if r["kind"] == "cuckoo":
-                f = PyCuckoo.__new__(PyCuckoo)
-                f.n_buckets = int(r["size"])
-                f.table = np.frombuffer(r["blob"], dtype=np.uint16) \
-                    .reshape(f.n_buckets, PyCuckoo.SLOTS).copy()
-            else:
-                f = PyBloom.__new__(PyBloom)
-                f.m = int(r["size"])
-                f.k = int(r["n_hash"])
-                f.bits = np.frombuffer(r["blob"], dtype=np.uint8).copy()
-            pf.filters[bv] = f
         pf.inserted[bv] = n
         pf.capacity[bv] = max(2 * n, exp_per_bucket)
     pf.build_rss_mb = max((float(r["rss_mb"]) for r in rows), default=0.0)
-    if s_path is not None:
-        FilterStore(s_path).save_meta(pf)
+    FilterStore(s_path).save_meta(pf)
     return pf
 
 
@@ -555,35 +412,11 @@ class FilterStore:
     def _bucket_path(self, bv: int) -> str:
         return os.path.join(self.path, f"bucket-{bv:06d}.npz")
 
-    def save(self, pf: PartitionedFilter) -> None:
-        """Full save (rebuilds): also drops bucket files the new layout no
-        longer owns — stale files are harmless for correctness (an empty
-        bucket can only false-positive, never false-negative) but waste
-        probe-side loads."""
-        live = {f"bucket-{bv:06d}.npz" for bv in pf.filters}
-        for name in os.listdir(self.path):
-            if name.startswith("bucket-") and name.endswith(".npz") \
-                    and name not in live:
-                os.remove(os.path.join(self.path, name))
-        self.save_buckets(pf, list(pf.filters))
-
-    def save_buckets(self, pf: PartitionedFilter, buckets: list[int]) -> None:
-        """Persist only the given buckets (incremental epoch updates touch
-        a handful of buckets — rewriting all P files per epoch would be
-        O(filter) instead of O(epoch inserts))."""
-        for bv in buckets:
-            f = pf.filters.get(bv)
-            if f is None:
-                continue
-            self.save_bucket_raw(bv, "cuckoo" if isinstance(f, PyCuckoo)
-                                 else "bloom", f)
-        self.save_meta(pf)
-
     def save_bucket_raw(self, bv: int, kind: str, f) -> None:
-        """Persist one bucket's filter object (also called executor-side by
-        ``build_partitioned(store_path=...)`` and ``store_apply_keys`` so
-        filter bytes never transit the driver). tmp+rename so a crash
-        mid-write never leaves a torn bucket file."""
+        """Persist one bucket's filter object (called executor-side by
+        ``build_partitioned`` and ``store_apply_keys`` so filter bytes
+        never transit the driver). tmp+rename so a crash mid-write never
+        leaves a torn bucket file."""
         path = self._bucket_path(bv)
         tmp = path + f".tmp-{uuid.uuid4().hex[:8]}.npz"
         if kind == "cuckoo":
@@ -683,12 +516,6 @@ class FilterStore:
                     n += 1
         return n
 
-    def has_exact_keys(self) -> bool:
-        try:
-            return bool(self.meta().get("exact_keys"))
-        except FileNotFoundError:
-            return False
-
     def clear(self) -> None:
         """Drop all bucket files + meta (before a rebuild with a new bucket
         layout — stale files of an old P would otherwise be probed)."""
@@ -700,11 +527,16 @@ class FilterStore:
     def save_meta(self, pf: PartitionedFilter,
                   source_version: int | None = None) -> None:
         meta = {"buckets": pf.buckets, "kind": pf.kind,
-                "exact_keys": bool(getattr(pf, "exact_keys", False)),
                 "inserted": {str(b): n for b, n in pf.inserted.items()},
                 "capacity": {str(b): n for b, n in pf.capacity.items()}}
         if source_version is not None:
             meta["source_version"] = int(source_version)
+        self.write_meta(meta)
+
+    def write_meta(self, meta: dict) -> None:
+        """The one writer of ``filter_meta.json``: tmp file + os.replace,
+        so a concurrent reader or a restart after a crash sees the old or
+        the new meta, never a torn file."""
         tmp = self._meta_path() + f".tmp-{uuid.uuid4().hex[:8]}"
         with open(tmp, "w") as fh:
             json.dump(meta, fh)
@@ -727,10 +559,7 @@ class FilterStore:
             m.pop("source_version", None)
         else:
             m["source_version"] = int(version)
-        tmp = self._meta_path() + f".tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as fh:
-            json.dump(m, fh)
-        os.replace(tmp, self._meta_path())
+        self.write_meta(m)
 
     def source_version(self) -> int | None:
         if not os.path.exists(self._meta_path()):
@@ -738,16 +567,12 @@ class FilterStore:
         v = self.meta().get("source_version")
         return None if v is None else int(v)
 
-    def load_meta_only(self, cap_per_bucket: int,
-                       fpp: float = 0.01) -> PartitionedFilter:
-        """Metadata-only PartitionedFilter over this store's persisted
-        buckets (the ``collect_to_driver=False`` shape build_partitioned
-        returns): probes go through the bucket files, the driver holds only
-        counters. Used by the clean-resume reload path."""
+    def load_meta_only(self) -> PartitionedFilter:
+        """PartitionedFilter over this store's persisted buckets (the shape
+        build_partitioned returns): probes go through the bucket files, the
+        driver holds only counters. Used by the clean-resume reload path."""
         m = self.meta()
-        pf = PartitionedFilter(m["buckets"], kind=m["kind"],
-                               cap_per_bucket=cap_per_bucket, fpp=fpp)
-        pf.exact_keys = bool(m.get("exact_keys"))
+        pf = PartitionedFilter(m["buckets"], kind=m["kind"])
         pf.inserted = {int(b): int(n) for b, n in m.get("inserted", {}).items()}
         pf.capacity = {int(b): int(n) for b, n in m.get("capacity", {}).items()}
         return pf
@@ -771,18 +596,6 @@ class FilterStore:
         f.k = int(z["k"])
         return f
 
-    def load(self) -> PartitionedFilter:
-        m = self.meta()
-        pf = PartitionedFilter(m["buckets"], kind=m["kind"])
-        for name in os.listdir(self.path):
-            if name.startswith("bucket-") and name.endswith(".npz"):
-                bv = int(name[len("bucket-"):-len(".npz")])
-                pf.filters[bv] = self.load_bucket(self.path, bv)
-        pf.inserted = {int(b): n for b, n in m.get("inserted", {}).items()}
-        pf.capacity = {int(b): n for b, n in m.get("capacity", {}).items()}
-        pf.exact_keys = bool(m.get("exact_keys"))
-        return pf
-
 
 def tag_by_filter_store(spark: SparkSession, batch: DataFrame,
                         store_path: str, key: str = "url_key",
@@ -794,19 +607,15 @@ def tag_by_filter_store(spark: SparkSession, batch: DataFrame,
     executor-memory-bounded probe for seen sets too large to broadcast
     (>~10^9 keys).
 
-    ``exact=True`` (store built with key segments): rows the approximate
-    filter flags are resolved against the bucket's exact sorted-key
-    segments via mmap searchsorted, so the tag is EXACT. Returning the
+    ``exact=True``: rows the approximate filter flags are resolved against
+    the bucket's exact sorted-key segments via mmap searchsorted, so the
+    tag is EXACT. Returning the
     tagged frame (rather than the two filtered branches) lets a caller
     cache ONE frame and derive fresh rows, duplicate keys, and batch
     counts from it without re-running the probe per branch."""
     store = FilterStore(store_path)
     meta = store.meta()
     P = int(meta["buckets"])
-    if exact and not meta.get("exact_keys"):
-        raise ValueError(
-            f"filter store {store_path} has no exact key segments; build "
-            "it via build_partitioned(store_path=...) before exact probes")
     s_path, do_exact = store_path, exact
 
     out_schema = T.StructType(batch.schema.fields +
@@ -888,10 +697,9 @@ def store_apply_keys(spark: SparkSession, keys_df: DataFrame,
     store = FilterStore(store_path)
     meta = store.meta()
     P, knd = int(meta["buckets"]), meta["kind"]
-    s_path, m_mode = store_path, mode
-    # epoch-stamped exact segments ride along when the store keeps them
-    # (and segment maintenance is as executor-side as the filters)
-    m_seq = seq if meta.get("exact_keys") else None
+    # epoch-stamped exact segments ride along with a ``seq`` (segment
+    # maintenance is as executor-side as the filters)
+    s_path, m_mode, m_seq = store_path, mode, seq
 
     out_schema = T.StructType([
         T.StructField("bv", T.IntegerType()),
@@ -938,9 +746,9 @@ def store_apply_keys(spark: SparkSession, keys_df: DataFrame,
                     st.apply_key_segment(bv, m_seq, arr, mode="delete")
             else:
                 if f is None:
-                    f = (PyCuckoo(max(len(arr) * 2, 65_536))
+                    f = (PyCuckoo(max(len(arr) * 2, NEW_BUCKET_ITEMS))
                          if knd == "cuckoo"
-                         else PyBloom(max(len(arr) * 2, 65_536)))
+                         else PyBloom(max(len(arr) * 2, NEW_BUCKET_ITEMS)))
                 if isinstance(f, PyCuckoo):
                     failed = f.add_many(arr)
                 else:
@@ -971,60 +779,8 @@ def store_apply_keys(spark: SparkSession, keys_df: DataFrame,
     for bv, n in per_bucket.items():
         ins[bv] = max(0, ins.get(bv, 0) + sign * n)
     meta["inserted"] = {str(b): n for b, n in ins.items()}
-    with open(os.path.join(store_path, "filter_meta.json"), "w") as fh:
-        json.dump(meta, fh)
+    store.write_meta(meta)
     return {"per_bucket": per_bucket, "failed": failed}
-
-
-def split_by_filter(spark: SparkSession, batch: DataFrame, filt,
-                    key: str = "url_key",
-                    bc_out: list | None = None) -> tuple[DataFrame, DataFrame]:
-    """(definitely_new, maybe_seen) under any approximate-membership filter
-    exposing ``contains_many`` (PyBloom / PyCuckoo). With no filter,
-    everything is maybe.
-
-    The probe is an Arrow-batched pandas UDF over the broadcast filter —
-    a handful of numpy ops per batch, no per-row Python.
-
-    ``bc_out``: optional list the created Broadcast is appended to, so a
-    long-running caller (the epoch loop) can ``unpersist`` it once the
-    epoch's actions have executed — each epoch re-broadcasts the mutated
-    filter, and without retirement the stale copies linger until GC
-    (O(epochs) executor memory on a long crawl).
-    """
-    if filt is None:
-        return batch.limit(0), batch
-    bc = spark.sparkContext.broadcast(filt)
-    if bc_out is not None:
-        bc_out.append(bc)
-
-    @F.pandas_udf(T.BooleanType())
-    def might_contain(keys: pd.Series) -> pd.Series:  # pragma: no cover
-        return pd.Series(
-            bc.value.contains_many(keys.to_numpy(dtype=np.int64)))
-
-    tagged = batch.withColumn("_maybe", might_contain(F.col(key)))
-    return (tagged.where(~F.col("_maybe")).drop("_maybe"),
-            tagged.where(F.col("_maybe")).drop("_maybe"))
-
-
-# back-compat alias
-split_by_bloom = split_by_filter
-
-
-def new_urls_bloom(spark: SparkSession, batch: DataFrame, seen: DataFrame,
-                   key: str = "url_key", fpp: float = 0.01,
-                   bloom=None, bc_out: list | None = None) -> DataFrame:
-    """Two-phase membership: approximate fast path (Bloom or cuckoo) +
-    exact anti-join on maybes. Semantically identical to ``exact_new_urls``
-    (neither filter has false negatives). Pass a prebuilt filter to
-    amortize the build across epochs."""
-    if bloom is None:
-        bloom = build_bloom(seen, key=key, fpp=fpp)
-    definitely_new, maybe = split_by_filter(spark, batch, bloom, key=key,
-                                            bc_out=bc_out)
-    checked = maybe.join(seen.select(key), key, "left_anti")
-    return definitely_new.unionByName(checked)
 
 
 def seen_updates(new_rows: DataFrame, epoch: int, buckets: int = 64) -> DataFrame:

@@ -22,8 +22,6 @@ salted (uniform) shuffle key.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -54,7 +52,6 @@ POP_HIST_BINS = 1024
 
 
 def pop_top_k_per_host(frontier: DataFrame, k: int, salts: int = 16,
-                       narrow: bool | None = None,
                        n_hosts_hint: int | None = None,
                        n_rows_hint: int | None = None,
                        strategy: str | None = None,
@@ -76,8 +73,7 @@ def pop_top_k_per_host(frontier: DataFrame, k: int, salts: int = 16,
     and its shuffle is pure overhead (measured 2x pop cost at the bench's
     k=20000, 150k rows/host).
 
-    Three physical strategies (``narrow=None`` auto-picks; pass
-    ``narrow=True/False`` to force narrow/wide for tests):
+    Three physical strategies, auto-picked unless ``strategy`` forces one:
 
     - narrow: rank a (url_key, host, priority, ts) ≈ 40 B/row projection,
       broadcast the ≤ k·|hosts| winners back onto the base — one narrow
@@ -85,10 +81,9 @@ def pop_top_k_per_host(frontier: DataFrame, k: int, salts: int = 16,
       rows: a 400 GB shuffle instead of 2 TB. Chosen when k ≤
       NARROW_POP_MAX_K AND k·|hosts| ≤ NARROW_POP_MAX_WINNERS.
     - histogram (the big-k × big-input default): SELECTION instead of
-      sort. Every strategy below ultimately ranks the whole input to find
-      each host's k-th row — a full sort of the narrow projection, the
-      memory-bandwidth-bound stage that capped 1→4-core scaling at ~0.77
-      in round-4 traces. This plan never sorts the input: (1) one narrow
+      sort. A ranking plan sorts the whole input to find each host's k-th
+      row — a full sort of the narrow projection, the memory-bandwidth-
+      bound stage that capped 1→4-core scaling at ~0.77 in round-4 traces. This plan never sorts the input: (1) one narrow
       aggregate gets per-host (count, min, max) of priority; (2) one
       narrow ``groupBy(host, bin)`` count over a B-bin normalized priority
       histogram (map-side partial agg — the shuffle is ≤ |hosts|·B tiny
@@ -101,17 +96,11 @@ def pop_top_k_per_host(frontier: DataFrame, k: int, salts: int = 16,
       shuffles + ~k·|hosts| full rows — no 400 GB narrow rank shuffle at
       all. Degenerate distributions (a host's priorities all equal → one
       bin) stay correct, they just re-rank that whole host.
-    - threshold: rank the SAME narrow projection (full narrow sort), then
-      broadcast only each host's k-th order tuple (|hosts| rows), filter
-      the base scan with it (exactly the k winners survive: the order is
-      total), and re-rank the ~k·|hosts| survivors. Kept for comparison
-      and as the fallback shape when priorities are adversarially
-      concentrated; the histogram plan replaces it as the auto pick.
     - wide: single full-width window — smallest constant factor for SMALL
       frontiers (≤ NARROW_POP_MIN_ROWS, where shuffle bytes don't matter).
 
-    ``strategy``: force one of 'wide' | 'narrow' | 'threshold' |
-    'histogram' (tests and plan audits); None auto-picks.
+    ``strategy``: force one of 'wide' | 'narrow' | 'histogram' (tests and
+    plan audits); None auto-picks.
 
     ``n_hosts_hint``: caller-supplied approximate host count (the epoch
     loop caches one ``approx_count_distinct`` per engine). Without it and
@@ -128,9 +117,7 @@ def pop_top_k_per_host(frontier: DataFrame, k: int, salts: int = 16,
     """
     small = n_rows_hint is not None and int(n_rows_hint) <= NARROW_POP_MIN_ROWS
     if strategy is None:
-        if narrow is not None:
-            strategy = "narrow" if narrow else "wide"
-        elif small:
+        if small:
             strategy = "wide"  # small frontier: bytes don't matter
         else:
             eligible = k <= NARROW_POP_MAX_K
@@ -142,12 +129,8 @@ def pop_top_k_per_host(frontier: DataFrame, k: int, salts: int = 16,
                 strategy = "narrow"
             else:
                 strategy = "histogram"
-    if os.environ.get("SPARK_GRAFT_EPOCH_TRACE"):
-        # names the auto-picked physical strategy in scaling-run traces
-        # (VERDICT r4 #5: evidence the big-k scaling epochs take the
-        # histogram selection plan, not an assumed one)
-        print(f"TRACE pop_strategy {strategy} k={k} salts={salts} "
-              f"bounds={priority_bounds}", flush=True)
+    if strategy not in ("wide", "narrow", "histogram"):
+        raise ValueError(f"unknown pop strategy {strategy!r}")
     if strategy == "histogram":
         return _histogram_pop(frontier, k, priority_bounds)
     if (salts > 1 and n_rows_hint is not None and n_hosts_hint is not None
@@ -156,7 +139,7 @@ def pop_top_k_per_host(frontier: DataFrame, k: int, salts: int = 16,
         # phase 1 wouldn't filter enough to pay for its extra shuffle:
         # let the single-window WindowGroupLimit tree top-k do the work
         salts = 1
-    if strategy in ("narrow", "threshold"):
+    if strategy == "narrow":
         base = frontier.select("url_key", "host", "priority", "discovered_ts")
     else:
         base = frontier
@@ -179,26 +162,8 @@ def pop_top_k_per_host(frontier: DataFrame, k: int, salts: int = 16,
     )
     if strategy == "wide":
         return ranked
-    if strategy == "narrow":
-        winners = ranked.select("url_key", "pop_rank")
-        return frontier.join(F.broadcast(winners), "url_key")
-    # threshold: each host's k-th order tuple gates the base scan. The pop
-    # order is TOTAL (url_key unique), so `ord <= kth` keeps exactly the k
-    # winners; hosts with < k rows have no threshold row and keep all.
-    ord_expr = F.struct((-F.col("priority")).alias("p"),
-                        F.col("discovered_ts").alias("t"),
-                        F.col("url_key").alias("u"))
-    thr = ranked.where(F.col("pop_rank") == k) \
-        .select("host", ord_expr.alias("_thr"))
-    surv = (
-        frontier.join(F.broadcast(thr), "host", "left")
-        .where(F.col("_thr").isNull() | (ord_expr <= F.col("_thr")))
-        .drop("_thr")
-    )
-    return (
-        surv.withColumn("pop_rank", F.row_number().over(w2))
-        .where(F.col("pop_rank") <= k)
-    )
+    winners = ranked.select("url_key", "pop_rank")
+    return frontier.join(F.broadcast(winners), "url_key")
 
 
 def _histogram_pop(frontier: DataFrame, k: int,

@@ -6,7 +6,7 @@ one-at-a-time through pipeline priorities 100→110→120→300,
 same stages set-wise):
 
   1. pop top-k per host from the frontier   (priority queue, skew-salted)
-  2. URL-seen membership                    (Bloom fast path + anti-join)
+  2. URL-seen membership                    (filter store + exact segments)
   3. politeness gate                        (robots broadcast + token bucket)
   4. fetch                                  (payload join → image+caption rows)
   5. commit: fetched ∪ url_seen ∪ frontier' ∪ metrics — each a snapshot
@@ -99,16 +99,17 @@ class CrawlEngine:
     top_k: int = 10
     epoch_budget_ms: int = politeness.DEFAULT_EPOCH_BUDGET_MS
     salts: int = 16
+    # True: URL-seen and frontier membership probe the filter stores under
+    # the state root — per-bucket filter files + exact key segments, probe
+    # tasks load only their own buckets after a repartition on
+    # pmod(url_key, P), so executor memory stays bounded at 10^10 keys.
+    # False: plain LEFT ANTI joins against the tables (the reference).
     use_bloom: bool = True
     filter_kind: str = "bloom"  # 'bloom' | 'cuckoo' (deletable variant)
     # per-bucket key capacity of the partitioned URL-seen filter (~32 MB
     # bitmap at 10 bits/key); bucket count scales with the seen set
     filter_cap_per_bucket: int = 25_000_000
-    # 'broadcast' ships the whole bucket dict to every python worker (fine
-    # to ~10^9 keys); 'store' persists buckets as files under the state
-    # root and probe tasks load only their own buckets after a repartition
-    # on pmod(url_key, P) — executor memory stays bounded at 10^10 keys
-    filter_probe: str = "broadcast"  # 'broadcast' | 'store'
+    filter_probe: str = "store"  # the only probe; any other value raises
     compact_every: int = 16  # frontier delete-deltas before MoR compaction
     # link discovery: >0 → each fetched page emits this many synthetic
     # outlinks (deterministic f(url_key); the fixture stand-in for S2).
@@ -122,18 +123,23 @@ class CrawlEngine:
     history: list[EpochResult] = field(default_factory=list)
 
     def __post_init__(self) -> None:
+        if self.filter_probe != "store":
+            raise ValueError(
+                f"filter_probe={self.filter_probe!r}: the filter store is the "
+                "only URL-seen probe ('store')")
         self.frontier_t = SnapshotTable(os.path.join(self.root, "frontier"), schemas.FRONTIER)
         self.url_seen_t = SnapshotTable(os.path.join(self.root, "url_seen"), schemas.URL_SEEN)
         self.fetched_t = SnapshotTable(os.path.join(self.root, "fetched"), schemas.FETCHED)
         self.metrics_t = SnapshotTable(os.path.join(self.root, "metrics"), schemas.METRICS)
         self.cash_t = SnapshotTable(os.path.join(self.root, "opic_cash"), schemas.OPIC_CASH)
-        # URL-seen filter sidecar: a PartitionedFilter built lazily from
-        # url_seen (executor-side per-bucket builds), extended incrementally
-        # per epoch. A fresh engine — i.e. a resumed job — rebuilds it from
-        # the table; an overfilled or insert-failed filter is discarded and
-        # rebuilt with more buckets (never silently degraded).
+        # URL-seen filter sidecar: a FilterStore built lazily from url_seen
+        # (executor-side per-bucket builds), extended incrementally per
+        # epoch; the driver keeps only its PartitionedFilter counters. A
+        # fresh engine — i.e. a resumed job — reloads or rebuilds it; an
+        # overfilled or insert-failed filter is discarded and rebuilt with
+        # more buckets (never silently degraded).
         self._filter: dedup.PartitionedFilter | None = None
-        # frontier-MEMBERSHIP filter sidecar (store mode): discovery dedup
+        # frontier-MEMBERSHIP filter sidecar: discovery dedup
         # probes this instead of anti-joining outlinks against the FULL
         # frontier key set — the round-4 loop's one remaining O(frontier)
         # shuffle per epoch (~80 GB of keys at 10^10 rows, VERDICT r4 #1).
@@ -158,10 +164,6 @@ class CrawlEngine:
         # frontier row estimate (bookkept: -popped +discovered per epoch);
         # lets the pop collapse its salt phase when it would be filterless
         self._frontier_rows_est: int | None = None
-        # broadcast-mode probe broadcasts, retired one epoch late (a live
-        # plan may still reference the current epoch's copy; without
-        # retirement stale copies linger until GC — O(epochs) memory)
-        self._probe_bcs: list = []
         # (n_popped, n_dedup_dropped) handed from the metrics commit thread
         # back to run_epoch (threads can't return through the pool cleanly
         # alongside the discovery thread's version number)
@@ -233,18 +235,18 @@ class CrawlEngine:
         # url_seen/frontier tables. The approximate filter files mutate in
         # place and keep the orphan keys — false positives the segments
         # reject, never false negatives, so no filter rebuild is needed.
-        if self.filter_probe == "store":
-            for d in (self._filter_store_dir(), self._frontier_filter_dir()):
-                if os.path.isdir(d):
-                    dedup.FilterStore(d).drop_segments_from(epoch)
+        for d in (self._filter_store_dir(), self._frontier_filter_dir()):
+            if os.path.isdir(d):
+                dedup.FilterStore(d).drop_segments_from(epoch)
 
     # -- URL-seen filter sidecar ----------------------------------------------
     def _filter_store_dir(self) -> str:
         return os.path.join(self.root, "url_seen_filters")
 
-    def _get_bloom(self) -> dedup.PartitionedFilter | None:
-        """Build once from url_seen (distributed per-bucket builds: the
-        driver never collects a key), then extend incrementally per epoch.
+    def _get_bloom(self) -> dedup.PartitionedFilter:
+        """Build once from url_seen (distributed per-bucket builds written
+        straight into the store: no key and no filter byte ever reaches the
+        driver), then extend incrementally per epoch.
         Rebuilt — with a bucket count scaled to the current seen size — when
         any bucket outgrows its design capacity: capacity grows by adding
         buckets, never by letting fpp degrade (the round-1 50M hard cap and
@@ -252,7 +254,7 @@ class CrawlEngine:
         (re)build — steady-state epochs never scan it (VERDICT r3 #7)."""
         if self._filter is not None and not self._filter.overfilled():
             return self._filter
-        if self._filter is None and self.filter_probe == "store":
+        if self._filter is None:
             # clean-resume reload (VERDICT r5 #2): the on-disk store is
             # durable and epoch-stamped; when its source stamp still equals
             # the url_seen table's current version, its buckets + exact
@@ -270,64 +272,38 @@ class CrawlEngine:
         n_seen = seen.count()
         # headroom for ~8 epochs of inserts without a rebuild
         expected = max(n_seen * 2, n_seen + 8 * self.top_k * 210, 1024)
-        if self.filter_probe == "store":
-            # executor-owned filter: builder tasks write bucket files
-            # straight into the store and the driver keeps only metadata —
-            # no filter bytes and no keys ever reach the driver (10^10 path)
-            store = dedup.FilterStore(self._filter_store_dir())
-            store.clear()  # stale buckets of an old layout must not probe
-            self._filter = dedup.build_partitioned(
-                seen, kind=self.filter_kind, expected=expected,
-                cap_per_bucket=self.filter_cap_per_bucket,
-                store_path=self._filter_store_dir(),
-                collect_to_driver=False,
-            )
-            if self._filter is not None:
-                store.stamp_source(self.url_seen_t.current_version())
-        else:
-            self._filter = dedup.build_partitioned(
-                seen, kind=self.filter_kind, expected=expected,
-                cap_per_bucket=self.filter_cap_per_bucket,
-            )
+        store = dedup.FilterStore(self._filter_store_dir())
+        store.clear()  # stale buckets of an old layout must not probe
+        # expected >= 1024, so build_partitioned never returns None: an
+        # EMPTY url_seen yields a store whose probe reads every key as new
+        self._filter = dedup.build_partitioned(
+            seen, self._filter_store_dir(), kind=self.filter_kind,
+            expected=expected, cap_per_bucket=self.filter_cap_per_bucket)
+        store.stamp_source(self.url_seen_t.current_version())
         return self._filter
 
     def _bloom_add_df(self, keys_df: DataFrame, epoch: int = 0) -> None:
-        """Extend the URL-seen filter with an epoch's new keys.
-
-        store mode: executor-side — each task merges its own buckets' files
+        """Extend the URL-seen filter with an epoch's new keys,
+        executor-side: each task merges its own buckets' files
         (dedup.store_apply_keys); the driver folds back only per-bucket
-        counters, zero key materialization. broadcast mode: the small-scale
-        convenience path — keys come to the driver (Arrow) and the
-        in-memory filter is extended + re-broadcast next probe."""
+        counters, zero key materialization."""
         if self._filter is None:
             return
-        if self.filter_probe == "store":
-            store = dedup.FilterStore(self._filter_store_dir())
-            res = dedup.store_apply_keys(
-                self.spark, keys_df.select("url_key"),
-                self._filter_store_dir(), seq=epoch)
-            if res["failed"]:  # cuckoo bucket full — rebuild before probing
-                self._filter = None
-                store.stamp_source(None)  # contents no longer reloadable
-                return
-            for bv, n in res["per_bucket"].items():
-                self._filter.inserted[bv] = \
-                    self._filter.inserted.get(bv, 0) + n
-            # persist counters + the source stamp: a clean resume reloads
-            # this exact state instead of rebuilding (VERDICT r5 #2)
-            store.save_meta(self._filter,
-                            source_version=self.url_seen_t.current_version())
-            return
-        # Arrow path — Row-object collect() is ~10x slower driver-side
-        import numpy as np
-
-        keys = keys_df.select("url_key").toPandas()["url_key"] \
-            .to_numpy(dtype=np.int64)
-        if not len(keys):
-            return
-        failed = self._filter.add_many(keys)
-        if failed:  # cuckoo bucket full — rebuild before the next probe
+        store = dedup.FilterStore(self._filter_store_dir())
+        res = dedup.store_apply_keys(
+            self.spark, keys_df.select("url_key"),
+            self._filter_store_dir(), seq=epoch)
+        if res["failed"]:  # cuckoo bucket full — rebuild before probing
             self._filter = None
+            store.stamp_source(None)  # contents no longer reloadable
+            return
+        for bv, n in res["per_bucket"].items():
+            self._filter.inserted[bv] = \
+                self._filter.inserted.get(bv, 0) + n
+        # persist counters + the source stamp: a clean resume reloads
+        # this exact state instead of rebuilding (VERDICT r5 #2)
+        store.save_meta(self._filter,
+                        source_version=self.url_seen_t.current_version())
 
     def _reload_store(self, store_dir: str,
                       table_version: int) -> dedup.PartitionedFilter | None:
@@ -342,20 +318,13 @@ class CrawlEngine:
                 return None
             if store.meta().get("kind") != self.filter_kind:
                 return None
-            return store.load_meta_only(self.filter_cap_per_bucket)
+            return store.load_meta_only()
         except Exception:
             return None  # torn/missing meta: rebuild
 
     # -- frontier-membership filter sidecar ------------------------------------
     def _frontier_filter_dir(self) -> str:
         return os.path.join(self.root, "frontier_filters")
-
-    def _frontier_filter_on(self) -> bool:
-        """The sidecar replaces discovery's frontier anti-join only on the
-        scale path (store-mode probes); broadcast/exact modes keep the plain
-        anti-join — at the scales those modes are for, the frontier key
-        shuffle is trivially cheap and the filter build isn't."""
-        return self.use_bloom and self.filter_probe == "store"
 
     def _get_frontier_filter(self, frontier: DataFrame) -> dedup.PartitionedFilter:
         """Build once from the epoch-start frontier (distributed per-bucket
@@ -384,11 +353,8 @@ class CrawlEngine:
         store = dedup.FilterStore(self._frontier_filter_dir())
         store.clear()  # stale buckets of an old layout must not probe
         self._frontier_filter = dedup.build_partitioned(
-            frontier, kind=self.filter_kind, expected=expected,
-            cap_per_bucket=self.filter_cap_per_bucket,
-            store_path=self._frontier_filter_dir(),
-            collect_to_driver=False,
-        )
+            frontier, self._frontier_filter_dir(), kind=self.filter_kind,
+            expected=expected, cap_per_bucket=self.filter_cap_per_bucket)
         # expected >= 1024 above, so build_partitioned never returns None:
         # an EMPTY frontier yields a zero-bucket store whose probe reads
         # every key as definitely-new — the correct degenerate answer.
@@ -478,19 +444,9 @@ class CrawlEngine:
         )
 
     # -- one epoch -----------------------------------------------------------
-    @staticmethod
-    def _trace(label: str, t_start: float) -> float:
-        """Per-step wall trace, gated on SPARK_GRAFT_EPOCH_TRACE (perf
-        forensics only — zero cost when unset)."""
-        now = time.time()
-        if os.environ.get("SPARK_GRAFT_EPOCH_TRACE"):
-            print(f"TRACE {label} {now - t_start:.2f}s", flush=True)
-        return now
-
     def run_epoch(self) -> EpochResult:
         spark = self.spark
         t0 = time.time()
-        tt = t0
         epoch = self.last_epoch() + 1
         self._recover(epoch)
         frontier_v = self.frontier_t.current_version()
@@ -514,25 +470,23 @@ class CrawlEngine:
             n_rows_hint=self._frontier_rows_est,
             priority_bounds=(0.0, 1.0))
 
-        tt = self._trace("pop_build", tt)
         # 2. URL-seen membership (epoch-level: state table vs this batch).
-        # Store mode is the 10^10 path and touches NO url_seen table scan:
-        # the filter store's exact key segments resolve the approximate
-        # filter's maybes via mmap searchsorted inside the same probe tasks
-        # (round-3 ran a confirming anti-join against the full table here —
-        # O(seen) IO+shuffle per epoch). Broadcast/exact modes still read
-        # the table; they are the small-scale conveniences.
+        # The filter path is the 10^10 path and touches NO url_seen table
+        # scan: the filter store's exact key segments resolve the
+        # approximate filter's maybes via mmap searchsorted inside the same
+        # probe tasks (round-3 ran a confirming anti-join against the full
+        # table here — O(seen) IO+shuffle per epoch). The exact path
+        # (use_bloom=False) anti-joins the table: the reference semantics.
         #
-        # Store mode caches the probe's TAGGED frame (pop ∪ _maybe flag)
-        # as the epoch's working set: fresh rows, duplicate keys (for the
-        # frontier delete), and the popped count all derive from one cache
-        # — the other modes cache the pop and anti-join for duplicates.
-        dup_keys = None  # store mode: exact duplicate keys, no anti-join
-        obs_pop = None  # store mode: popped/dup counts ride the plan
+        # The filter path caches the probe's TAGGED frame (pop ∪ _maybe
+        # flag) as the epoch's working set: fresh rows, duplicate keys (for
+        # the frontier delete), and the popped count all derive from one
+        # cache — the exact path caches the pop and anti-joins for
+        # duplicates.
+        dup_keys = None  # filter path: exact duplicate keys, no anti-join
+        obs_pop = None  # filter path: popped/dup counts ride the plan
         if self.use_bloom:
-            filt = self._get_bloom()
-        if self.use_bloom and self.filter_probe == "store" and \
-                filt is not None:
+            self._get_bloom()
             # popped + dedup-dropped counters OBSERVE the tagged frame (one
             # CollectMetrics node below the cache) instead of a dedicated
             # popped.count() job in the metrics thread — one fewer driver
@@ -555,20 +509,8 @@ class CrawlEngine:
         else:
             popped = popped.cache()
             epoch_cache = popped
-            if self.use_bloom:
-                # retire the PREVIOUS epoch's probe broadcast (its actions
-                # have all executed), then probe with a fresh copy of the
-                # mutated filter
-                while len(self._probe_bcs) > 0:
-                    self._probe_bcs.pop().unpersist()
-                fresh = dedup.new_urls_bloom(
-                    spark, popped, self.url_seen_t.read(spark), bloom=filt,
-                    bc_out=self._probe_bcs)
-            else:
-                fresh = dedup.exact_new_urls(
-                    popped, self.url_seen_t.read(spark))
+            fresh = dedup.exact_new_urls(popped, self.url_seen_t.read(spark))
 
-        tt = self._trace("filter_get", tt)
         # re-rank after dedup: seen URLs must not consume politeness budget
         # (reference: Scrapy's dupefilter drops requests before the
         # scheduler, so the download budget only ever sees fresh URLs).
@@ -611,7 +553,6 @@ class CrawlEngine:
         # pop→dedup→politeness→fetch chain (and its caches + observations)
         # in one Spark job.
         self.fetched_t.append(fetched, meta={"epoch": epoch})
-        tt = self._trace("commit_fetched", tt)
         pm, fm = obs_polite.get, obs_fetched.get
         n_fresh = int(pm["n_fresh"])
         n_deferred = int(pm["n_deferred"])
@@ -633,12 +574,14 @@ class CrawlEngine:
                 self._bloom_add_df(seen_upd, epoch=epoch)
 
         def _commit_metrics() -> None:
-            # n_popped: store mode reads the observation that rode the
-            # fetched append (zero extra jobs); other modes count the warm
-            # popped cache (sub-100ms job). Then the per-partition lineage
-            # rows aggregate executor-side and append WITHOUT a driver
-            # collect (round-3 collected + re-created them)
-            if obs_pop is not None:
+            # n_popped: the filter path reads the observation that rode the
+            # fetched append (zero extra jobs); the exact path — and an
+            # epoch with no fresh row, whose plan AQE may prune to an empty
+            # relation the observation never sees (a drained frontier) —
+            # counts the warm popped cache (sub-100ms job). Then the
+            # per-partition lineage rows aggregate executor-side and append
+            # WITHOUT a driver collect (round-3 collected + re-created them)
+            if obs_pop is not None and n_fresh > 0:
                 n_popped = int(obs_pop.get["n_popped"])
                 n_dropped = int(obs_pop.get["n_dup"])
             else:
@@ -677,8 +620,8 @@ class CrawlEngine:
             # (applied at compaction — per-epoch in-place priority updates
             # would rewrite the whole MoR table).
             out = self._discover_outlinks(polite, fetched)
-            if dup_keys is not None:
-                # scale path (store mode): frontier membership via the
+            if self.use_bloom:
+                # filter path: frontier membership via the
                 # sidecar's exact-segment probe — NO shuffle of the frontier
                 # key set (round 4 anti-joined outlinks against ALL frontier
                 # keys here: ~80 GB of keys per epoch at 10^10 rows, the
@@ -701,14 +644,14 @@ class CrawlEngine:
                 cand, _ = dedup.split_by_filter_store(
                     spark, cand, self._filter_store_dir(), exact=True)
             else:
-                # small-scale convenience modes: ONE left join against the
-                # frontier key set, cached, feeds both branches — the r5
-                # anti-join + semi-join pair executed the frontier key
-                # shuffle twice per epoch (two separate actions: frontier
-                # append and cash append; exchange reuse does not span
-                # jobs). url_key is unique in the frontier by construction
-                # (bootstrap fixtures + groupBy'd additions + pop deletes),
-                # so the left join cannot fan out.
+                # exact path: ONE left join against the frontier key set,
+                # cached, feeds both branches — the r5 anti-join +
+                # semi-join pair executed the frontier key shuffle twice
+                # per epoch (two separate actions: frontier append and cash
+                # append; exchange reuse does not span jobs). url_key is
+                # unique in the frontier by construction (bootstrap
+                # fixtures + groupBy'd additions + pop deletes), so the
+                # left join cannot fan out.
                 known = frontier.select(
                     "url_key", F.lit(True).alias("_in_frontier"))
                 tagged_bc = out.join(known, "url_key", "left").cache()
@@ -750,7 +693,7 @@ class CrawlEngine:
                 additions, meta={"epoch": epoch, "stage": "discovery"},
                 expected_version=frontier_v,
             )
-            if dup_keys is not None:
+            if self.use_bloom:
                 # extend the frontier sidecar with this epoch's additions
                 # (epoch-stamped segments; _recover drops them on replay).
                 # Applied AFTER the table append, mirroring url_seen: a
@@ -771,8 +714,8 @@ class CrawlEngine:
         # stays on the ordered critical path below (recovery keys on the
         # frontier commit being last).
         if dup_keys is not None:
-            # store mode: popped ∖ deferred ≡ attempted ∪ exact duplicates
-            # — both straight off this epoch's caches. The general-mode
+            # filter path: popped ∖ deferred ≡ attempted ∪ exact duplicates
+            # — both straight off this epoch's caches. The exact path's
             # popped-vs-deferred anti-join shuffles 2·|popped| rows to
             # produce a result that is usually a few % of that.
             remove = attempted.select("url_key").unionByName(dup_keys)
@@ -791,7 +734,7 @@ class CrawlEngine:
                  "delete": _prepare_delete}
         if self._discovery_on():
             tasks["discovery"] = _commit_discovery
-            if self._frontier_filter_on():
+            if self.use_bloom:
                 if self._frontier_filter is None:
                     # clean-resume reload (VERDICT r5 #2) — must happen
                     # BEFORE this epoch's stamp-clear below: a cleanly
@@ -822,7 +765,6 @@ class CrawlEngine:
                 for f in futs.values():
                     f.result()  # re-raises any remaining task error
             n_popped, n_dedup_dropped = self._epoch_counts
-            tt = self._trace("parallel_commits", tt)
 
             # frontier': remove attempted + duplicate rows (deferred stay
             # queued) as a merge-on-read delete delta — O(popped), never
@@ -847,11 +789,10 @@ class CrawlEngine:
                 shutil.rmtree(os.path.join(self.frontier_t.path, delete_dir),
                               ignore_errors=True)
             raise
-        tt = self._trace("frontier_delete", tt)
         if self.frontier_t.n_delete_deltas() >= self.compact_every:
             fv = self._compact_frontier(epoch)
 
-        if self._frontier_filter is not None and self._frontier_filter_on():
+        if self._frontier_filter is not None:
             if self.filter_kind == "cuckoo":
                 # EXACTLY-LIVE sidecar maintenance (VERDICT r5 #3): delete
                 # this epoch's removed frontier keys (attempted + dups)
@@ -941,9 +882,9 @@ class CrawlEngine:
             expired.select("url_key", "first_seen_epoch"),
             ["url_key", "first_seen_epoch"],
             meta={"epoch": cur, "ttl_expired": n})
-        # ADVICE r5 (medium): the store-mode sidecar's stale-present branch
-        # may have queued OPIC cash for keys that had already LEFT the
-        # frontier (rows broadcast/exact modes never write). While such a
+        # ADVICE r5 (medium): the bloom frontier sidecar's stale-present
+        # branch may have queued OPIC cash for keys that had already LEFT
+        # the frontier (rows the exact path never writes). While such a
         # key stays in url_seen that cash is dead — compaction's left join
         # finds no frontier row — but expiry re-opens the key, and if it is
         # re-discovered before the next compaction the dead cash would fold
@@ -958,29 +899,22 @@ class CrawlEngine:
         self.cash_t.delete_by_keys(dead_cash, ["url_key", "epoch"],
                                    meta={"epoch": cur, "ttl_cash_purge": n})
         if self.filter_kind == "cuckoo" and self._filter is not None:
-            if self.filter_probe == "store":
-                # executor-side in-place deletes on the bucket files —
-                # expired keys never reach the driver
-                res = dedup.store_apply_keys(
-                    spark, expired.select("url_key"),
-                    self._filter_store_dir(), mode="delete", seq=cur)
-                for bv, d in res["per_bucket"].items():
-                    self._filter.inserted[bv] = max(
-                        0, self._filter.inserted.get(bv, 0) - d)
-                # deletes applied in place: re-stamp at the post-expiry
-                # table version so a clean resume still reloads
-                dedup.FilterStore(self._filter_store_dir()).save_meta(
-                    self._filter,
-                    source_version=self.url_seen_t.current_version())
-            else:
-                import numpy as np
-
-                keys = expired.select("url_key").toPandas()["url_key"] \
-                    .to_numpy(dtype=np.int64)
-                self._filter.delete_many(keys)
+            # executor-side in-place deletes on the bucket files — expired
+            # keys never reach the driver
+            res = dedup.store_apply_keys(
+                spark, expired.select("url_key"),
+                self._filter_store_dir(), mode="delete", seq=cur)
+            for bv, d in res["per_bucket"].items():
+                self._filter.inserted[bv] = max(
+                    0, self._filter.inserted.get(bv, 0) - d)
+            # deletes applied in place: re-stamp at the post-expiry table
+            # version so a clean resume still reloads
+            dedup.FilterStore(self._filter_store_dir()).save_meta(
+                self._filter,
+                source_version=self.url_seen_t.current_version())
         else:
             self._filter = None  # Bloom can't delete: rebuild lazily
-            if self.filter_probe == "store":
+            if self.use_bloom:
                 # stale store must not be reloaded on a later resume
                 dedup.FilterStore(self._filter_store_dir()).stamp_source(None)
         # frontier-membership sidecar under expiry (VERDICT r5 #3):
@@ -994,10 +928,10 @@ class CrawlEngine:
         #   expiry re-opens those keys → invalidate and rebuild from the
         #   table before the next discovery probe, or the expired URLs
         #   could never be re-discovered.
-        if not (self.filter_kind == "cuckoo" and self._frontier_filter_on()
+        if not (self.filter_kind == "cuckoo"
                 and self._frontier_filter is not None):
             self._frontier_filter = None
-            if self._frontier_filter_on():
+            if self.use_bloom:
                 dedup.FilterStore(self._frontier_filter_dir()).stamp_source(None)
         return n
 

@@ -53,9 +53,9 @@ from scrapy_newsutils_spark.plans.epoch import CrawlEngine
 from scrapy_newsutils_spark.session import get_spark
 
 cpus = int(sys.argv[1]); rows = int(sys.argv[2]); epochs = int(sys.argv[3])
-topk = int(sys.argv[4]); fixdir = sys.argv[5]; probe = sys.argv[6]
-fanout = int(sys.argv[7]) if len(sys.argv) > 7 else 0
-disco_images = int(sys.argv[8]) if len(sys.argv) > 8 else 0
+topk = int(sys.argv[4]); fixdir = sys.argv[5]
+fanout = int(sys.argv[6]) if len(sys.argv) > 6 else 0
+disco_images = int(sys.argv[7]) if len(sys.argv) > 7 else 0
 # state + shuffle on tmpfs: the sandbox has ONE physical disk, so disk
 # bandwidth would be the (artificial) ceiling at higher thread counts; a
 # real cluster's aggregate disk/shuffle bandwidth grows with executors.
@@ -73,7 +73,6 @@ root = tempfile.mkdtemp(prefix=f"scale{{cpus}}_", dir="/dev/shm")
 images = fixtures.images_table(spark, n=1500, small=True).cache(); images.count()
 eng = CrawlEngine(spark, root, images=images,
                   robots=fixtures.robots_table(spark), top_k=topk, salts=16,
-                  filter_probe=probe,
                   # VERDICT r5 #1: the measured loop can now run WITH link
                   # discovery, so the scaling number exercises the frontier
                   # sidecar probe + _commit_discovery + cash append
@@ -95,19 +94,14 @@ print("RESULT " + json.dumps({{"cpus": cpus, "wall_sec": round(wall, 2),
 
 
 def run_level(repo: str, cpus: int, rows: int, epochs: int, topk: int,
-              fixdir: str, probe: str = "store", fanout: int = 0,
-              disco_images: int = 0) -> dict:
+              fixdir: str, fanout: int = 0, disco_images: int = 0) -> dict:
     code = CHILD.format(repo=repo)
     out = subprocess.run(
         [sys.executable, "-c", code, str(cpus), str(rows), str(epochs),
-         str(topk), fixdir, probe, str(fanout), str(disco_images)],
+         str(topk), fixdir, str(fanout), str(disco_images)],
         capture_output=True, text=True, timeout=3600,
     )
     for line in out.stdout.splitlines():
-        if line.startswith("TRACE "):
-            # per-step attribution (SPARK_GRAFT_EPOCH_TRACE in the child's
-            # inherited env) — relay so the parent log keeps the evidence
-            print(f"local[{cpus}] {line}", flush=True)
         if line.startswith("RESULT "):
             return json.loads(line[len("RESULT "):])
     raise RuntimeError(f"level local[{cpus}] failed:\n{out.stdout[-2000:]}\n{out.stderr[-4000:]}")
@@ -122,13 +116,6 @@ def main() -> None:
                          "within physical cores (SMT beyond ~8 threads caps the "
                          "hardware itself at ~0.79 efficiency on this box)")
     ap.add_argument("--top-k", type=int, default=20_000)
-    ap.add_argument("--filter-probe", default="store",
-                    choices=["store", "broadcast"],
-                    help="url-seen probe mode for the measured engine; "
-                         "'store' is the 10^10 scale path (mmap bucket "
-                         "files + exact key segments — no per-epoch filter "
-                         "broadcast, no url_seen table scan) and is what "
-                         "the scaling criterion grades")
     ap.add_argument("--discovery-fanout", type=int, default=0,
                     help="run the measured loop WITH link discovery "
                          "(synthetic outlinks per fetched page) so the "
@@ -163,10 +150,10 @@ def main() -> None:
     lo_runs, hi_runs = [], []
     for i in range(args.repeat):
         lo_runs.append(run_level(repo, args.n, args.rows, args.epochs,
-                                 args.top_k, fixdir, args.filter_probe,
+                                 args.top_k, fixdir,
                                  args.discovery_fanout, args.discovery_images))
         hi_runs.append(run_level(repo, args.n * 4, args.rows, args.epochs,
-                                 args.top_k, fixdir, args.filter_probe,
+                                 args.top_k, fixdir,
                                  args.discovery_fanout, args.discovery_images))
         print(f"repeat {i + 1}/{args.repeat}: N={lo_runs[-1]['wall_sec']}s "
               f"4N={hi_runs[-1]['wall_sec']}s", flush=True)
@@ -192,7 +179,6 @@ def main() -> None:
                     f"must not carry the result), per-level min reported "
                     f"as least-contended capacity",
         "discovery_fanout": args.discovery_fanout,
-        "filter_probe": args.filter_probe,
         "N": lo, "4N": hi,
         "N_all_walls": [r["wall_sec"] for r in lo_runs],
         "4N_all_walls": [r["wall_sec"] for r in hi_runs],

@@ -75,8 +75,7 @@ def main() -> None:
 
     t0 = time.time()
     store_dir = os.path.join(work, "frontier_filters")
-    dedup.build_partitioned(frontier, expected=args.rows * 2,
-                            store_path=store_dir, collect_to_driver=False)
+    dedup.build_partitioned(frontier, store_dir, expected=args.rows * 2)
     build_s = round(time.time() - t0, 2)
 
     def run_antijoin() -> tuple[int, int]:

@@ -46,7 +46,7 @@ def main() -> None:
     frontier = fixtures.frontier_table(spark, n=args.rows, n_images=500)
     eng = CrawlEngine(spark, root, images=images,
                       robots=fixtures.robots_table(spark),
-                      top_k=args.top_k, salts=8, filter_probe="store",
+                      top_k=args.top_k, salts=8,
                       filter_cap_per_bucket=args.cap_per_bucket,
                       discovery_fanout=args.fanout, discovery_images=500)
     eng.bootstrap(frontier, fixtures.url_seen_table(spark, frontier))
@@ -55,14 +55,14 @@ def main() -> None:
     real_build = dedup.build_partitioned
     state = {"epoch": 0}
 
-    def counting_build(*a, **kw):
-        sp = kw.get("store_path") or ""
-        which = ("frontier" if "frontier_filters" in sp
-                 else "url_seen" if "url_seen_filters" in sp else "other")
+    def counting_build(seen, store_path, *a, **kw):
+        which = ("frontier" if "frontier_filters" in store_path
+                 else "url_seen" if "url_seen_filters" in store_path
+                 else "other")
         builds.append({"epoch": state["epoch"], "store": which,
                        "expected": kw.get("expected"),
                        "frontier_est": eng._frontier_rows_est})
-        return real_build(*a, **kw)
+        return real_build(seen, store_path, *a, **kw)
 
     dedup.build_partitioned = counting_build
     walls = []

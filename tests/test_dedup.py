@@ -1,17 +1,28 @@
-"""URL-seen dedup: Bloom+anti-join must equal the plain anti-join (J1).
+"""URL-seen dedup: the filter-store probe must equal the plain anti-join (J1).
 
 Reference semantics: per-day seen-set membership
 (/root/reference/src/newsutils/pipelines.py:74-95). The Bloom fast path may
 never produce false negatives; its false-positive rate only costs extra
-exact-join work.
+exact-resolution work.
 """
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
+import pandas as pd
 from pyspark.sql import functions as F
 
 from scrapy_newsutils_spark.operators import dedup
+
+
+def _keys(df):
+    return {r["url_key"] for r in df.select("url_key").collect()}
+
+
+def _keys_df(spark, keys):
+    return spark.createDataFrame(pd.DataFrame({"url_key": keys}))
 
 
 def test_bloom_no_false_negatives_numpy():
@@ -32,14 +43,18 @@ def test_bloom_fpp_reasonable():
     assert fpr < 0.03, f"observed fpp {fpr}"
 
 
-def test_bloom_path_equals_exact_antijoin(spark, frontier_df, url_seen_df):
-    exact = dedup.exact_new_urls(frontier_df, url_seen_df)
-    bloomed = dedup.new_urls_bloom(spark, frontier_df, url_seen_df)
-    a = {r["url_key"] for r in exact.select("url_key").collect()}
-    b = {r["url_key"] for r in bloomed.select("url_key").collect()}
+def test_bloom_path_equals_exact_antijoin(spark, tmp_path, frontier_df,
+                                          url_seen_df):
+    """Two-phase membership — approximate store probe, then the anti-join
+    on its maybes only — equals the plain anti-join."""
+    sp = str(tmp_path / "filters")
+    dedup.build_partitioned(url_seen_df, sp)
+    definitely_new, maybe = dedup.split_by_filter_store(spark, frontier_df, sp)
+    a = _keys(dedup.exact_new_urls(frontier_df, url_seen_df))
+    b = _keys(definitely_new) | _keys(dedup.exact_new_urls(maybe, url_seen_df))
     assert a == b
     # and the split is real: some rows were known-new without the join
-    assert len(a) > 0
+    assert len(_keys(definitely_new)) > 0
 
 
 def test_seen_semantics_membership(spark, frontier_df, url_seen_df):
@@ -62,76 +77,88 @@ def test_seen_updates_bucketing(spark, frontier_df):
 
 # -- partitioned (bucketed) URL-seen filters — the 10^10-key scale path --------
 
-def test_partitioned_filter_no_false_negatives_and_routing():
+def test_partitioned_filter_no_false_negatives_and_routing(spark, tmp_path):
+    """Keys from the bulk build and from incremental store_apply_keys
+    inserts land in bucket ``key mod P`` and are never missed by the
+    approximate probe; disjoint keys are mostly rejected."""
     rng = np.random.default_rng(11)
     keys = rng.integers(-(2**62), 2**62, size=30_000, dtype=np.int64)
+    probe = rng.integers(0, 2**62, size=30_000, dtype=np.int64)
+    probe = probe[~np.isin(probe, keys)]
     for kind in ("bloom", "cuckoo"):
-        pf = dedup.PartitionedFilter(buckets=7, kind=kind, new_bucket_items=16_384)
-        assert pf.add_many(keys) == 0
-        assert bool(pf.contains_many(keys).all()), kind
+        sp = str(tmp_path / kind)
+        dedup.build_partitioned(_keys_df(spark, keys[:15_000]), sp,
+                                kind=kind, buckets=7)
+        res = dedup.store_apply_keys(spark, _keys_df(spark, keys[15_000:]), sp)
+        assert res["failed"] == 0, kind
+        b, n = np.unique(keys % 7, return_counts=True)
+        meta = dedup.FilterStore(sp).meta()
+        assert {int(k): int(v) for k, v in meta["inserted"].items()} == \
+            dict(zip(b.tolist(), n.tolist())), kind
+        tagged = dedup.tag_by_filter_store(
+            spark, _keys_df(spark, np.concatenate([keys, probe])), sp)
+        maybe = {r["url_key"]: r["_maybe"] for r in tagged.collect()}
+        assert all(maybe[int(k)] for k in keys), kind
         # disjoint probes mostly rejected (fast path does real work)
-        probe = rng.integers(0, 2**62, size=30_000, dtype=np.int64)
-        fresh = ~np.isin(probe, keys)
-        fpr = pf.contains_many(probe[fresh]).mean()
+        fpr = np.mean([maybe[int(k)] for k in probe])
         assert fpr < 0.05, (kind, fpr)
 
 
-def test_build_partitioned_matches_exact(spark, frontier_df, url_seen_df):
+def test_build_partitioned_matches_exact(spark, tmp_path, frontier_df,
+                                        url_seen_df):
     """Distributed per-bucket build + two-phase membership == plain anti-join,
     for both filter kinds, with a multi-bucket layout (cap forces >1 bucket)."""
-    exact = {r["url_key"] for r in
-             dedup.exact_new_urls(frontier_df, url_seen_df).select("url_key").collect()}
+    exact = _keys(dedup.exact_new_urls(frontier_df, url_seen_df))
     n_seen = url_seen_df.count()
     for kind in ("bloom", "cuckoo"):
-        pf = dedup.build_partitioned(url_seen_df, kind=kind,
+        sp = str(tmp_path / kind)
+        pf = dedup.build_partitioned(url_seen_df, sp, kind=kind,
                                      cap_per_bucket=max(n_seen // 3, 8))
         assert pf is not None and pf.buckets > 1  # the cap forced bucketing
-        got = {r["url_key"] for r in
-               dedup.new_urls_bloom(spark, frontier_df, url_seen_df,
-                                    bloom=pf).select("url_key").collect()}
+        new_s, maybe_s = dedup.split_by_filter_store(spark, frontier_df, sp)
+        got = _keys(new_s) | _keys(dedup.exact_new_urls(maybe_s, url_seen_df))
         assert got == exact, kind
+        new_x, _ = dedup.split_by_filter_store(spark, frontier_df, sp,
+                                               exact=True)
+        assert _keys(new_x) == exact, kind
 
 
-def test_partitioned_filter_overfill_detected():
-    pf = dedup.PartitionedFilter(buckets=2, kind="bloom", new_bucket_items=64)
+def test_partitioned_filter_overfill_detected(spark, tmp_path):
+    """Incremental inserts past a bucket's design capacity are SIGNALLED
+    (the owner rebuilds with more buckets), never silently degraded."""
     rng = np.random.default_rng(3)
-    pf.add_many(rng.integers(0, 2**62, size=50, dtype=np.int64))
-    assert not pf.overfilled()
-    pf.add_many(rng.integers(0, 2**62, size=200, dtype=np.int64))
-    assert pf.overfilled()  # degradation is SIGNALLED, never silent
-
-
-def test_filter_store_probe_equals_broadcast(spark, tmp_path, frontier_df, url_seen_df):
-    """split_by_filter_store (per-bucket lazy file loads, no broadcast) must
-    partition the batch identically to the in-memory broadcast probe."""
-    pf = dedup.build_partitioned(url_seen_df, kind="bloom",
-                                 cap_per_bucket=max(url_seen_df.count() // 3, 8))
-    store = dedup.FilterStore(str(tmp_path / "filters"))
-    store.save(pf)
-    new_b, maybe_b = dedup.split_by_filter(spark, frontier_df, pf)
-    new_s, maybe_s = dedup.split_by_filter_store(spark, frontier_df,
-                                                 str(tmp_path / "filters"))
-    k = lambda df: {r["url_key"] for r in df.select("url_key").collect()}
-    assert k(new_b) == k(new_s)
-    assert k(maybe_b) == k(maybe_s)
-    # round-trip load preserves membership
-    assert bool(store.load().contains_many(
-        np.array([r["url_key"] for r in url_seen_df.select("url_key").collect()],
-                 dtype=np.int64)).all())
+    sp = str(tmp_path / "filters")
+    dedup.build_partitioned(
+        _keys_df(spark, rng.integers(0, 2**62, size=50, dtype=np.int64)), sp,
+        buckets=2, expected=50)
+    store = dedup.FilterStore(sp)
+    assert not store.load_meta_only().overfilled()
+    dedup.store_apply_keys(
+        spark, _keys_df(spark, rng.integers(0, 2**62, size=200,
+                                            dtype=np.int64)), sp)
+    assert not store.load_meta_only().overfilled()
+    dedup.store_apply_keys(
+        spark, _keys_df(spark, rng.integers(0, 2**62, size=4000,
+                                            dtype=np.int64)), sp)
+    assert store.load_meta_only().overfilled()
 
 
 def test_build_partitioned_store_direct_write(spark, tmp_path, frontier_df,
                                               url_seen_df):
-    """build_partitioned(store_path=..., collect_to_driver=False): builder
-    tasks write bucket .npz files straight into the FilterStore and the
-    driver never holds filter bytes (the 10^10 path — 800 x 32 MB buckets
-    must not be collected). The store probe must equal the plain anti-join."""
+    """build_partitioned: build tasks write each bucket's .npz filter and
+    exact key segment straight into the FilterStore and the driver gets
+    back only counters (the 10^10 path — 800 x 32 MB buckets must not be
+    collected). The store probe must equal the plain anti-join."""
     sp = str(tmp_path / "filters")
-    pf = dedup.build_partitioned(url_seen_df, kind="bloom",
-                                 cap_per_bucket=max(url_seen_df.count() // 3, 8),
-                                 store_path=sp, collect_to_driver=False)
+    pf = dedup.build_partitioned(url_seen_df, sp, kind="bloom",
+                                 cap_per_bucket=max(url_seen_df.count() // 3, 8))
     assert pf is not None and pf.buckets > 1
-    assert pf.filters == {}  # metadata-only on the driver
+    # metadata-only on the driver: counters, no filter arrays
+    assert not any(isinstance(v, np.ndarray) for v in vars(pf).values())
+    files = set(os.listdir(sp))
+    for bv in pf.inserted:
+        assert f"bucket-{bv:06d}.npz" in files
+        assert f"bucket-{bv:06d}.keys-00000000.npy" in files
     new_s, maybe_s = dedup.split_by_filter_store(spark, frontier_df, sp)
     exact_new = {r["url_key"] for r in
                  dedup.exact_new_urls(frontier_df, url_seen_df)
@@ -146,30 +173,28 @@ def test_build_partitioned_store_direct_write(spark, tmp_path, frontier_df,
     assert got_new | rest == exact_new
 
 
-def test_build_partitioned_scale_memory_budget(spark):
+def test_build_partitioned_scale_memory_budget(spark, tmp_path):
     """North-rule build evidence (VERDICT r2 #1): 10^8 synthetic keys,
     multi-bucket layout, per-task peak RSS under a fixed budget. The round-2
     build (Python-list buffers, 256-task cap) held ~28 B/boxed-key and would
     blow past this budget; the Arrow/numpy chunked build holds 8 B/key plus
-    the worker baseline. Scaled down via SPARK_GRAFT_SCALE_KEYS if set."""
-    import os
-
-    from pyspark.sql import functions as F
-
+    the worker baseline. The store (filters + exact key segments) takes
+    ~1.1 GB under tmp_path at 10^8 keys. Scaled down via
+    SPARK_GRAFT_SCALE_KEYS if set."""
     n = int(os.environ.get("SPARK_GRAFT_SCALE_KEYS", 100_000_000))
     cap = max(n // 5, 1024)
     seen = spark.range(0, n).select(F.xxhash64("id").alias("url_key"))
-    pf = dedup.build_partitioned(seen, expected=n, cap_per_bucket=cap)
+    sp = str(tmp_path / "filters")
+    pf = dedup.build_partitioned(seen, sp, expected=n, cap_per_bucket=cap)
     assert pf.buckets == dedup.pick_buckets(n, cap)  # uncapped layout
-    assert pf.n_inserted() == n
+    assert sum(pf.inserted.values()) == n
     # fixed per-task budget: 8 B/key for the task's bucket + filter bits +
     # python-worker baseline. 10^8/10 buckets -> ~80 MB keys; observed
     # ~760 MB total incl. worker overhead. 28 B/boxed-key would need >2 GB.
     assert pf.build_rss_mb < 1600, pf.build_rss_mb
-    # membership exactness on a sample
-    ks = np.array([r["url_key"] for r in seen.limit(2000).collect()],
-                  dtype=np.int64)
-    assert bool(pf.contains_many(ks).all())
+    # membership exactness on a sample: no built key reads definitely-new
+    _, maybe = dedup.split_by_filter_store(spark, seen.limit(2000), sp)
+    assert maybe.count() == 2000
 
 
 def test_cuckoo_bulk_insert_matches_membership():
@@ -199,9 +224,8 @@ def test_store_apply_keys_executor_side(spark, tmp_path, url_seen_df):
     from pyspark.sql import functions as F
 
     sp = str(tmp_path / "filters")
-    pf = dedup.build_partitioned(url_seen_df, kind="cuckoo",
-                                 cap_per_bucket=max(url_seen_df.count() // 3, 8),
-                                 store_path=sp, collect_to_driver=False)
+    pf = dedup.build_partitioned(url_seen_df, sp, kind="cuckoo",
+                                 cap_per_bucket=max(url_seen_df.count() // 3, 8))
     assert pf.buckets > 1
     extra = spark.range(1_000_000, 1_000_400).select(
         F.xxhash64("id").alias("url_key"))
@@ -229,10 +253,8 @@ def test_split_store_exact_matches_anti_join(spark, tmp_path, frontier_df,
     from pyspark.sql import functions as F
 
     sp = str(tmp_path / "filters")
-    dedup.build_partitioned(url_seen_df, kind="bloom",
-                            cap_per_bucket=max(url_seen_df.count() // 3, 8),
-                            store_path=sp, collect_to_driver=False)
-    assert dedup.FilterStore(sp).has_exact_keys()
+    dedup.build_partitioned(url_seen_df, sp, kind="bloom",
+                            cap_per_bucket=max(url_seen_df.count() // 3, 8))
     new_s, seen_s = dedup.split_by_filter_store(spark, frontier_df, sp,
                                                 exact=True)
     k = lambda df: {r["url_key"] for r in df.select("url_key").collect()}
@@ -261,8 +283,7 @@ def test_segment_compaction_preserves_membership(spark, tmp_path, url_seen_df):
     from pyspark.sql import functions as F
 
     sp = str(tmp_path / "filters")
-    dedup.build_partitioned(url_seen_df, kind="bloom", buckets=2,
-                            store_path=sp, collect_to_driver=False)
+    dedup.build_partitioned(url_seen_df, sp, kind="bloom", buckets=2)
     st = dedup.FilterStore(sp)
     for e in range(1, st.SEG_COMPACT_N + 3):
         batch = spark.range(e * 10_000, e * 10_000 + 50).select(
@@ -327,3 +348,30 @@ def test_segment_compaction_uses_chunked_merge(tmp_path, monkeypatch):
     assert bool(st.contains_exact(bv, probe).all())
     assert not st.contains_exact(
         bv, np.array([999, 10**12], dtype=np.int64)).any()
+
+
+def test_store_meta_writes_are_atomic(spark, tmp_path, url_seen_df,
+                                      monkeypatch):
+    """Every writer of filter_meta.json goes through tmp file + os.replace:
+    a direct "w" open of the live meta file (a reader or a restart after a
+    crash could see it torn) fails the test."""
+    import builtins
+
+    sp = str(tmp_path / "filters")
+    dedup.build_partitioned(url_seen_df, store_path=sp, kind="cuckoo")
+    real_open = builtins.open
+
+    def guarded(file, mode="r", *a, **k):
+        if os.path.basename(str(file)) == "filter_meta.json" and "w" in mode:
+            raise AssertionError(f"non-atomic write of {file}")
+        return real_open(file, mode, *a, **k)
+
+    monkeypatch.setattr(builtins, "open", guarded)
+    extra = spark.range(3_000_000, 3_000_050).select(
+        F.xxhash64("id").alias("url_key"))
+    res = dedup.store_apply_keys(spark, extra, sp, seq=1)
+    assert sum(res["per_bucket"].values()) == 50
+    store = dedup.FilterStore(sp)
+    store.stamp_source(7)
+    assert store.source_version() == 7
+    assert sum(store.meta()["inserted"].values()) == url_seen_df.count() + 50

@@ -264,12 +264,12 @@ def test_parse_discovery_resume_identical(spark, tmp_path):
         assert ka == kb, attr
 
 
-# -- frontier-membership filter sidecar (store mode, VERDICT r4 #1) -------------
+# -- frontier-membership filter sidecar (VERDICT r4 #1) -----------------------
 
 def _run_disco(spark, root, frontier_df, images_df, robots_df, seen_df,
-               probe, epochs=3, **over):
+               use_bloom=True, epochs=3, **over):
     eng = CrawlEngine(spark, root, images=images_df, robots=robots_df,
-                      top_k=4, salts=4, filter_probe=probe,
+                      top_k=4, salts=4, use_bloom=use_bloom,
                       filter_cap_per_bucket=300,
                       discovery_fanout=3, discovery_images=200, **over)
     eng.bootstrap(frontier_df, seen_df)
@@ -277,18 +277,19 @@ def _run_disco(spark, root, frontier_df, images_df, robots_df, seen_df,
     return eng
 
 
-def test_discovery_store_mode_matches_broadcast(spark, tmp_path, frontier_df,
-                                                images_df, robots_df,
-                                                url_seen_df):
+def test_discovery_store_mode_matches_exact(spark, tmp_path, frontier_df,
+                                            images_df, robots_df,
+                                            url_seen_df):
     """Store mode's frontier-membership sidecar (filter probe instead of the
-    anti-join against the full frontier key set) must reproduce the
-    broadcast engine's state EXACTLY — including post-compaction priorities,
-    which fold the lazily-queued OPIC cash (the sidecar's stale-present
-    keys route dead cash into cash_t; compaction's left join must drop it)."""
+    anti-join against the full frontier key set) must reproduce the exact
+    engine's (use_bloom=False) state EXACTLY — including post-compaction
+    priorities, which fold the lazily-queued OPIC cash (the sidecar's
+    stale-present keys route dead cash into cash_t; compaction's left join
+    must drop it)."""
     a = _run_disco(spark, str(tmp_path / "a"), frontier_df, images_df,
-                   robots_df, url_seen_df, "broadcast", compact_every=2)
+                   robots_df, url_seen_df, use_bloom=False, compact_every=2)
     b = _run_disco(spark, str(tmp_path / "b"), frontier_df, images_df,
-                   robots_df, url_seen_df, "store", compact_every=2)
+                   robots_df, url_seen_df, compact_every=2)
     for attr in ("frontier_t", "url_seen_t", "fetched_t"):
         ka = sorted(r["url_key"] for r in
                     getattr(a, attr).read(spark).select("url_key").collect())
@@ -312,7 +313,7 @@ def test_discovery_sidecar_probe_no_frontier_scan(spark, tmp_path,
     no live frontier key reads 'new', and every 'maybe' is either live or
     url_seen (the stale-present equivalence the design relies on)."""
     eng = _run_disco(spark, str(tmp_path / "s"), frontier_df, images_df,
-                     robots_df, url_seen_df, "store", epochs=2)
+                     robots_df, url_seen_df, epochs=2)
     live = {r["url_key"] for r in
             eng.frontier_t.read(spark).select("url_key").collect()}
     seen = {r["url_key"] for r in
@@ -341,12 +342,12 @@ def test_discovery_store_resume_identical(spark, tmp_path, frontier_df,
     rebuilds the sidecar from the table and converges to the uninterrupted
     run (epoch-stamped segment recovery + deterministic replay)."""
     a = _run_disco(spark, str(tmp_path / "ra"), frontier_df, images_df,
-                   robots_df, url_seen_df, "store", epochs=3)
+                   robots_df, url_seen_df, epochs=3)
     b = _run_disco(spark, str(tmp_path / "rb"), frontier_df, images_df,
-                   robots_df, url_seen_df, "store", epochs=1)
+                   robots_df, url_seen_df, epochs=1)
     b2 = CrawlEngine(spark, str(tmp_path / "rb"), images=images_df,
                      robots=robots_df, top_k=4, salts=4,
-                     filter_probe="store", filter_cap_per_bucket=300,
+                     filter_cap_per_bucket=300,
                      discovery_fanout=3, discovery_images=200)
     b2.run(2)
     for attr in ("frontier_t", "url_seen_t", "fetched_t"):
@@ -360,15 +361,15 @@ def test_discovery_store_resume_identical(spark, tmp_path, frontier_df,
 def test_expire_between_discovery_and_compaction_parity(
         spark, tmp_path, frontier_df, images_df, robots_df, url_seen_df):
     """ADVICE r5 (medium): store mode's stale-present branch queues OPIC
-    cash rows that broadcast mode never writes. If a TTL expiry re-opens
+    cash rows that the exact engine never writes. If a TTL expiry re-opens
     such a key and it is re-discovered before the next compaction, the dead
     cash must NOT fold into the re-added key's priority — expire_seen now
-    purges the expired keys' queued cash, so both modes compact to
+    purges the expired keys' queued cash, so both engines compact to
     identical (url_key, priority) frontiers."""
 
-    def run(probe, root):
+    def run(use_bloom, root):
         eng = CrawlEngine(spark, root, images=images_df, robots=robots_df,
-                          top_k=4, salts=4, filter_probe=probe,
+                          top_k=4, salts=4, use_bloom=use_bloom,
                           filter_cap_per_bucket=300, discovery_fanout=3,
                           discovery_images=200, compact_every=100)
         eng.bootstrap(frontier_df, url_seen_df)
@@ -378,8 +379,8 @@ def test_expire_between_discovery_and_compaction_parity(
         eng._compact_frontier(eng.last_epoch())
         return eng
 
-    a = run("broadcast", str(tmp_path / "xa"))
-    b = run("store", str(tmp_path / "xb"))
+    a = run(False, str(tmp_path / "xa"))
+    b = run(True, str(tmp_path / "xb"))
     pa = sorted((r["url_key"], round(r["priority"], 9)) for r in
                 a.frontier_t.read(spark).collect())
     pb = sorted((r["url_key"], round(r["priority"], 9)) for r in
@@ -402,9 +403,9 @@ def test_clean_resume_reloads_filter_stores(spark, tmp_path, frontier_df,
     exact state. A crashed epoch (stamp mismatch after rollback) keeps the
     rebuild path (covered by test_discovery_store_resume_identical)."""
     a = _run_disco(spark, str(tmp_path / "ca"), frontier_df, images_df,
-                   robots_df, url_seen_df, "store", epochs=3)
+                   robots_df, url_seen_df, epochs=3)
     b = _run_disco(spark, str(tmp_path / "cb"), frontier_df, images_df,
-                   robots_df, url_seen_df, "store", epochs=2)
+                   robots_df, url_seen_df, epochs=2)
     del b
 
     from scrapy_newsutils_spark.operators import dedup as dedup_mod
@@ -419,7 +420,7 @@ def test_clean_resume_reloads_filter_stores(spark, tmp_path, frontier_df,
     monkeypatch.setattr(dedup_mod, "build_partitioned", counting_build)
     b2 = CrawlEngine(spark, str(tmp_path / "cb"), images=images_df,
                      robots=robots_df, top_k=4, salts=4,
-                     filter_probe="store", filter_cap_per_bucket=300,
+                     filter_cap_per_bucket=300,
                      discovery_fanout=3, discovery_images=200)
     b2.run(1)
     assert calls["n"] == 0, "clean resume must reload stores, not rebuild"
@@ -437,12 +438,13 @@ def test_cuckoo_expiry_rediscovery_without_sidecar_rebuild(
     """VERDICT r5 #3: with the cuckoo (deletable) kind the frontier sidecar
     is maintained exactly-live, so a recrawl-TTL expiry triggers NO sidecar
     rebuild — and expired URLs are still re-discoverable, with state parity
-    vs the broadcast engine running the same schedule."""
+    vs the exact engine (use_bloom=False) running the same schedule, before
+    and after a compaction folds the queued cash."""
     from scrapy_newsutils_spark.operators import dedup as dedup_mod
 
-    def run(probe, root):
+    def run(use_bloom, root):
         eng = CrawlEngine(spark, root, images=images_df, robots=robots_df,
-                          top_k=4, salts=4, filter_probe=probe,
+                          top_k=4, salts=4, use_bloom=use_bloom,
                           filter_kind="cuckoo", filter_cap_per_bucket=300,
                           discovery_fanout=3, discovery_images=200,
                           compact_every=100)
@@ -451,8 +453,8 @@ def test_cuckoo_expiry_rediscovery_without_sidecar_rebuild(
         eng.expire_seen(0)
         return eng
 
-    a = run("broadcast", str(tmp_path / "ea"))
-    b = run("store", str(tmp_path / "eb"))
+    a = run(False, str(tmp_path / "ea"))
+    b = run(True, str(tmp_path / "eb"))
 
     calls = {"n": 0}
     real_build = dedup_mod.build_partitioned
@@ -471,8 +473,12 @@ def test_cuckoo_expiry_rediscovery_without_sidecar_rebuild(
         kb = sorted(r["url_key"] for r in
                     getattr(b, attr).read(spark).select("url_key").collect())
         assert ka == kb, attr
-    pa = sorted((r["url_key"], round(r["priority"], 9)) for r in
-                a.frontier_t.read(spark).collect())
-    pb = sorted((r["url_key"], round(r["priority"], 9)) for r in
-                b.frontier_t.read(spark).collect())
-    assert pa == pb
+
+    def priorities(eng):
+        return sorted((r["url_key"], round(r["priority"], 9)) for r in
+                      eng.frontier_t.read(spark).collect())
+
+    assert priorities(a) == priorities(b)
+    for eng in (a, b):
+        eng._compact_frontier(eng.last_epoch())
+    assert priorities(a) == priorities(b)

@@ -171,10 +171,10 @@ def test_commit_conflict_detection(spark, tmp_path, frontier_df, images_df,
 def test_expire_seen_recrawl_ttl(spark, tmp_path, frontier_df, images_df,
                                  robots_df, url_seen_df):
     """Recrawl TTL: expired url_seen rows disappear via an MoR delete
-    delta; the cuckoo filter forgets the keys in place (delete_many — the
-    deletable variant's purpose); a URL re-seen later appends a new row
-    that SURVIVES the old delete (delete keyed on url_key+epoch)."""
-    import numpy as np
+    delta; the cuckoo filter store forgets the keys in place (executor-side
+    delete_many — the deletable variant's purpose); a URL re-seen later
+    appends a new row that SURVIVES the old delete (delete keyed on
+    url_key+epoch)."""
     from scrapy_newsutils_spark.operators import dedup as DD
 
     eng = CrawlEngine(spark, str(tmp_path / "ttl"), images=images_df,
@@ -182,14 +182,19 @@ def test_expire_seen_recrawl_ttl(spark, tmp_path, frontier_df, images_df,
                       filter_kind="cuckoo")
     eng.bootstrap(frontier_df, url_seen_df)
     eng.run(1)
-    seen_keys = np.array(
-        [r["url_key"] for r in
-         eng.url_seen_t.read(spark).select("url_key").collect()],
-        dtype=np.int64)
+    seen_keys = [r["url_key"] for r in
+                 eng.url_seen_t.read(spark).select("url_key").collect()]
+    seen = spark.createDataFrame([(k,) for k in seen_keys], "url_key long")
     n_before = len(seen_keys)
     assert n_before > 0
-    filt = eng._get_bloom()
-    assert bool(filt.contains_many(seen_keys).all())
+
+    def filter_hit_share() -> float:
+        # the approximate filter alone (exact=False): the cuckoo buckets
+        tagged = DD.tag_by_filter_store(spark, seen, eng._filter_store_dir())
+        return tagged.where("_maybe").count() / n_before
+
+    eng._get_bloom()
+    assert filter_hit_share() == 1.0
 
     dropped = eng.expire_seen(0)  # everything is older than 0 epochs
     assert dropped == n_before
@@ -197,7 +202,7 @@ def test_expire_seen_recrawl_ttl(spark, tmp_path, frontier_df, images_df,
     # in-place forget: most expired keys no longer hit (residual collisions
     # from shared 16-bit fingerprints are false POSITIVES — harmless)
     assert eng._filter is not None  # no rebuild needed for cuckoo
-    assert eng._filter.contains_many(seen_keys).mean() < 0.1
+    assert filter_hit_share() < 0.1
 
     # a re-seen URL survives the old delete delta
     one = spark.createDataFrame(

@@ -81,8 +81,8 @@ def test_opic_cash_update(spark, frontier_df):
         assert after[u] == before[u]
 
 
-def test_threshold_strategy_equals_wide(spark, frontier_df):
-    """Every physical pop strategy (wide / threshold / histogram, plus the
+def test_pop_strategies_equal_wide(spark, frontier_df):
+    """Every physical pop strategy (wide / narrow / histogram, plus the
     auto pick under big hints) must produce exactly the same rows+ranks —
     including hosts with fewer than k rows (no gate row → keep all)."""
     from scrapy_newsutils_spark.operators import frontier as fops
@@ -91,10 +91,10 @@ def test_threshold_strategy_equals_wide(spark, frontier_df):
         return {(r["url_key"], r["pop_rank"]) for r in
                 df.select("url_key", "pop_rank").collect()}
 
-    wide = fops.pop_top_k_per_host(frontier_df, 5, salts=4, narrow=False)
+    wide = fops.pop_top_k_per_host(frontier_df, 5, salts=4, strategy="wide")
     a = keys(wide)
     assert len(a) > 0
-    for strat in ("threshold", "histogram"):
+    for strat in ("narrow", "histogram"):
         got = fops.pop_top_k_per_host(frontier_df, 5, salts=4,
                                       strategy=strat)
         assert keys(got) == a, strat
@@ -105,6 +105,11 @@ def test_threshold_strategy_equals_wide(spark, frontier_df):
                                    n_hosts_hint=1_000_000,
                                    n_rows_hint=fops.NARROW_POP_MIN_ROWS + 1)
     assert keys(auto) == a
+    # the auto pick for frontiers over NARROW_POP_MIN_ROWS with few winners
+    narrow = fops.pop_top_k_per_host(frontier_df, 5, salts=4,
+                                     n_hosts_hint=20,
+                                     n_rows_hint=fops.NARROW_POP_MIN_ROWS + 1)
+    assert keys(narrow) == a
 
 
 def test_histogram_pop_degenerate_and_tied_priorities(spark, frontier_df):
@@ -119,7 +124,7 @@ def test_histogram_pop_degenerate_and_tied_priorities(spark, frontier_df):
         "priority",
         F.when(F.col("host") == "hot1.example.com", F.lit(0.5))
         .otherwise(F.round(F.col("priority") * 4) / 4))  # heavy tie bands
-    wide = fops.pop_top_k_per_host(flat, 7, salts=4, narrow=False)
+    wide = fops.pop_top_k_per_host(flat, 7, salts=4, strategy="wide")
     hist = fops.pop_top_k_per_host(flat, 7, salts=4, strategy="histogram")
     a = {(r["url_key"], r["pop_rank"]) for r in
          wide.select("url_key", "pop_rank").collect()}
@@ -148,7 +153,7 @@ def test_histogram_fixed_grid_bounds_equals_wide(spark, frontier_df):
         F.when(F.col("host") == "hot1.example.com", F.lit(0.5))
         .otherwise(F.round(F.col("priority") * 4) / 4))
     for df in (frontier_df, flat):
-        wide = fops.pop_top_k_per_host(df, 7, salts=4, narrow=False)
+        wide = fops.pop_top_k_per_host(df, 7, salts=4, strategy="wide")
         grid = fops.pop_top_k_per_host(df, 7, salts=4, strategy="histogram",
                                        priority_bounds=(0.0, 1.0))
         a, b = keys(wide), keys(grid)

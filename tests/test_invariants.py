@@ -52,23 +52,54 @@ def test_cuckoo_engine_matches_bloom_engine(spark, tmp_path, frontier_df,
     assert run("bloom", "b") == run("cuckoo", "c")
 
 
-def test_store_probe_engine_matches_broadcast_engine(spark, tmp_path,
-                                                     frontier_df, images_df,
-                                                     robots_df, url_seen_df):
-    """filter_probe='store' (per-bucket file loads after a bucket
-    repartition — the no-broadcast 10^10 path) must fetch the exact same
-    URL set as the broadcast probe."""
-    def run(probe, name):
-        eng = CrawlEngine(spark, str(tmp_path / name), images=images_df,
-                          robots=robots_df, top_k=4, salts=4,
-                          filter_probe=probe,
-                          filter_cap_per_bucket=300)  # force >1 bucket
-        eng.bootstrap(frontier_df, url_seen_df)
-        eng.run(2)
-        return sorted(r["url_key"] for r in
-                      eng.fetched_t.read(spark).select("url_key").collect())
+def test_store_probe_engine_matches_exact_engine(spark, tmp_path,
+                                                 frontier_df, images_df,
+                                                 robots_df, url_seen_df):
+    """The filter-store probe (per-bucket file loads after a bucket
+    repartition — the 10^10 path), for both filter kinds, must leave the
+    exact state of the plain anti-join engine (use_bloom=False) — here
+    across a crash between the url_seen commit (table AND exact segments)
+    and the epoch-closing frontier commit, resumed by a fresh engine."""
+    from scrapy_newsutils_spark.operators import dedup
 
-    assert run("broadcast", "pb") == run("store", "ps")
+    def mk(name, **kw):
+        return CrawlEngine(spark, str(tmp_path / name), images=images_df,
+                           robots=robots_df, top_k=4, salts=4,
+                           filter_cap_per_bucket=300,  # force >1 bucket
+                           **kw)
+
+    def keys(eng, attr):
+        return sorted(r["url_key"] for r in
+                      getattr(eng, attr).read(spark).select("url_key")
+                      .collect())
+
+    ref = mk("exact", use_bloom=False)
+    ref.bootstrap(frontier_df, url_seen_df)
+    ref.run(2)
+    orphan = frontier_df.limit(6).select(
+        "url_key", "host", F.lit(2).alias("first_seen_epoch"),
+        (F.col("url_key") % 64).cast("int").alias("bucket"))
+    for kind in ("bloom", "cuckoo"):
+        eng = mk(kind, filter_kind=kind)
+        eng.bootstrap(frontier_df, url_seen_df)
+        eng.run(1)
+        eng.url_seen_t.append(orphan, meta={"epoch": 2})
+        dedup.store_apply_keys(spark, orphan.select("url_key"),
+                               eng._filter_store_dir(), seq=2)
+        resumed = mk(kind, filter_kind=kind)
+        resumed.run(1)
+        for attr in ("frontier_t", "url_seen_t", "fetched_t"):
+            assert keys(resumed, attr) == keys(ref, attr), (kind, attr)
+
+
+def test_filter_probe_accepts_only_store(spark, tmp_path, images_df,
+                                        robots_df):
+    """The filter store is the only approximate URL-seen probe."""
+    CrawlEngine(spark, str(tmp_path / "ok"), images=images_df,
+                robots=robots_df, filter_probe="store")
+    with pytest.raises(ValueError):
+        CrawlEngine(spark, str(tmp_path / "bc"), images=images_df,
+                    robots=robots_df, filter_probe="broadcast")
 
 
 def test_camel_snake_roundtrip():
@@ -95,7 +126,7 @@ def test_metapost_link_factory_pluggable(spark):
 def test_store_mode_zero_driver_key_materialization(spark, tmp_path, frontier_df,
                                                     images_df, robots_df,
                                                     url_seen_df, monkeypatch):
-    """filter_probe='store': the whole epoch loop — filter build, probe,
+    """The filter-store path: the whole epoch loop — filter build, probe,
     incremental insert — must never pull keys to the driver. Spy: any
     toPandas() during run_epoch fails the test (the round-2 loop pulled each
     epoch's new keys through toPandas to extend the driver-held filter)."""
@@ -103,7 +134,7 @@ def test_store_mode_zero_driver_key_materialization(spark, tmp_path, frontier_df
 
     eng = CrawlEngine(spark, str(tmp_path / "nodriver"), images=images_df,
                       robots=robots_df, top_k=4, salts=4,
-                      filter_probe="store", filter_cap_per_bucket=300)
+                      filter_cap_per_bucket=300)
     eng.bootstrap(frontier_df, url_seen_df)
 
     def banned(self, *a, **k):
@@ -113,7 +144,9 @@ def test_store_mode_zero_driver_key_materialization(spark, tmp_path, frontier_df
     res = eng.run(2)
     assert res[0].popped > 0 and res[0].fetched_ok > 0
     # the driver holds only metadata — no filter bytes
-    assert eng._filter is not None and eng._filter.filters == {}
+    assert eng._filter is not None
+    assert not any(isinstance(v, np.ndarray)
+                   for v in vars(eng._filter).values())
 
 
 def test_store_mode_steady_state_never_scans_url_seen(spark, tmp_path,
@@ -126,7 +159,7 @@ def test_store_mode_steady_state_never_scans_url_seen(spark, tmp_path,
     raises for epoch 2."""
     eng = CrawlEngine(spark, str(tmp_path / "noscan"), images=images_df,
                       robots=robots_df, top_k=4, salts=4,
-                      filter_probe="store", filter_cap_per_bucket=300)
+                      filter_cap_per_bucket=300)
     eng.bootstrap(frontier_df, url_seen_df)
     r1 = eng.run_epoch()
     assert r1.fetched_ok > 0
@@ -151,7 +184,7 @@ def test_store_mode_recovery_drops_orphan_segments(spark, tmp_path,
     def mk(name):
         eng = CrawlEngine(spark, str(tmp_path / name), images=images_df,
                           robots=robots_df, top_k=4, salts=4,
-                          filter_probe="store", filter_cap_per_bucket=300)
+                          filter_cap_per_bucket=300)
         eng.bootstrap(frontier_df, url_seen_df)
         return eng
 
