@@ -2,11 +2,19 @@
 
 Parallelism is local[8] (the bench's N size); tests assert semantics that must
 be partitioning-invariant, so any fixed level works.
+
+The whole suite shares one JVM, so its heap is capped (``SPARK_DRIVER_MEMORY``,
+default 4g here instead of the engine's 16g: a 16g heap grows past what a
+host with ~15 GB of RAM has left next to the Python workers), and every test's
+``tmp_path`` is deleted when the test ends (crawl-engine tests write up to
+~1.3 GB of fetched image payloads each, which would otherwise pile up for the
+whole session).
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import sys
 
 import pytest
@@ -17,6 +25,13 @@ from scrapy_newsutils_spark import fixtures  # noqa: E402
 from scrapy_newsutils_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
+os.environ.setdefault("SPARK_DRIVER_MEMORY", "4g")
+
+
+@pytest.fixture()
+def tmp_path(tmp_path):
+    yield tmp_path
+    shutil.rmtree(tmp_path, ignore_errors=True)
 
 
 @pytest.fixture(scope="session")
