@@ -35,10 +35,6 @@ def main() -> None:
                          "synthesized when omitted)")
     ap.add_argument("--synthetic-frontier-rows", type=int, default=0,
                     help="sandbox only: synthesize a frontier of this size")
-    ap.add_argument("--filter-kind", default="bloom",
-                    choices=["bloom", "cuckoo"],
-                    help="URL-seen sidecar: bloom, or the deletable cuckoo "
-                         "(recrawl TTL forgets keys in place)")
     ap.add_argument("--discovery-fanout", type=int, default=0,
                     help=">0: fetched pages emit this many outlinks "
                          "(synthetic S2 stand-in)")
@@ -66,7 +62,6 @@ def main() -> None:
     eng = CrawlEngine(spark, args.state_root, images=images, robots=robots,
                       top_k=args.top_k, salts=args.salts,
                       epoch_budget_ms=args.epoch_budget_ms,
-                      filter_kind=args.filter_kind,
                       discovery_fanout=args.discovery_fanout)
 
     if eng.last_epoch() == 0:

@@ -1,4 +1,4 @@
-"""Hashing primitives for dedup/similarity: shingles, MinHash, SimHash.
+"""Hashing primitives for dedup/similarity: shingles, SimHash, Jaccard.
 
 All pure Column expressions (JVM-side, codegen) — no Python in the hot path.
 Two hash families are offered:
@@ -26,39 +26,6 @@ def shingles(text: Column, k: int = 3) -> Column:
     return F.array_distinct(
         F.when(n >= k, F.transform(idx, lambda i: F.array_join(F.slice(toks, i, k), " ")))
         .otherwise(F.array(F.array_join(toks, " ")))
-    )
-
-
-def minhash_signature(shingle_arr: Column, num_hashes: int = 16) -> Column:
-    """MinHash signature as array<string>: element i = min over shingles of
-    md5(i || '|' || shingle). String-min is lexicographic — identical in
-    Spark and DuckDB, making signatures oracle-checkable."""
-
-    def hasher(prefix: str):
-        # NB: must be a 1-arg lambda — pyspark treats a 2nd lambda param as
-        # the array index, which would shadow a `i=i` default capture.
-        return lambda s: F.md5(F.concat(F.lit(prefix), s))
-
-    return F.array(
-        *[
-            F.array_min(F.transform(shingle_arr, hasher(f"{i}|")))
-            for i in range(num_hashes)
-        ]
-    )
-
-
-def lsh_band_keys(signature: Column, bands: int, rows: int) -> Column:
-    """Banding: split the signature into ``bands`` groups of ``rows`` and
-    hash each group → array<string> of band keys. Docs sharing any band key
-    are near-dup candidates (classic MinHash-LSH)."""
-    return F.array(
-        *[
-            F.concat(
-                F.lit(f"b{b}:"),
-                F.md5(F.array_join(F.slice(signature, b * rows + 1, rows), "|")),
-            )
-            for b in range(bands)
-        ]
     )
 
 

@@ -1,23 +1,19 @@
 """Text scalar functions + text-analysis operators (Column-expression first).
 
 Reference scalars: ``add_fullstop`` (/root/reference/src/newsutils/helpers.py:83-88),
-``wordcount`` (helpers.py:80), ``remove_diacritics`` (helpers.py:104-112).
+``wordcount`` (helpers.py:80).
 Training-pipeline additions (per the build brief): language-ID (stopword
 n-gram heuristic), quality scoring, token counting (whitespace + BPE-ish
 regex), and document fingerprinting.
 
-Everything except NFKD stripping is a JVM-side Column expression (codegen,
-oracle-able in ANSI SQL); ``remove_diacritics`` needs unicodedata → pandas UDF.
+Everything is a JVM-side Column expression (codegen, oracle-able in ANSI
+SQL).
 """
 
 from __future__ import annotations
 
-import unicodedata
-
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 # ---------------------------------------------------------------------------
 # reference scalars
@@ -34,18 +30,6 @@ def wordcount(text: Column) -> Column:
     """len(text.split(' ')) — reference helpers.py:80 (space-split, so empty
     string counts as 1; we keep those semantics)."""
     return F.size(F.split(text, " "))
-
-
-@F.pandas_udf(T.StringType())
-def remove_diacritics_udf(s: pd.Series) -> pd.Series:  # pragma: no cover
-    def strip(x: str | None) -> str | None:
-        if x is None:
-            return None
-        return "".join(
-            c for c in unicodedata.normalize("NFKD", x) if not unicodedata.combining(c)
-        )
-
-    return s.map(strip)
 
 
 def camel_to_snake(name: str) -> str:
@@ -176,14 +160,3 @@ def fingerprint(text: Column) -> Column:
     )
     return F.md5(norm)
 
-
-def rolling_fingerprints(text: Column, window: int = 8) -> Column:
-    """Winnowing-style rolling fingerprints: md5 of each ``window``-token
-    shingle — the primitive under near-dup detection. Returns array<string>."""
-    toks = tokens_of(text)
-    n = F.size(toks)
-    idx = F.sequence(F.lit(1), F.greatest(n - F.lit(window - 1), F.lit(1)))
-    return F.when(n >= window,
-                  F.transform(idx, lambda i: F.md5(
-                      F.array_join(F.slice(toks, i, window), " ")))
-                  ).otherwise(F.array(F.md5(F.array_join(toks, " "))))

@@ -1,4 +1,4 @@
-"""URL-seen dedup: partitioned Bloom/cuckoo filter store + exact key segments (J1).
+"""URL-seen dedup: partitioned Bloom filter store + exact key segments (J1).
 
 Reference semantics (/root/reference/src/newsutils/pipelines.py:74-95): a
 per-day in-memory ``set`` of short_links, lazily hydrated from the sink —
@@ -8,7 +8,7 @@ classification slow path (operators/edits.py).
 At 10^10-URL scale the seen set cannot be a set — the engine keeps it as a
 bucketed state table and runs membership as a two-phase filter:
 
-  fast path: a Bloom/cuckoo filter built from the seen keys rejects the
+  fast path: a Bloom filter built from the seen keys rejects the
   overwhelmingly-common definitely-new URLs without shuffling the state
   table. Spark 4 does not expose ``bloom_filter_agg`` to SQL, so filters
   are built distributed (numpy, vectorized splitmix64 mixing). The filter
@@ -24,9 +24,14 @@ bucketed state table and runs membership as a two-phase filter:
 
   slow path: only the filter's *maybe-hits* (|batch|·fpp + true dupes) are
   resolved exactly, by mmap'd searchsorted against the store's sorted
-  per-bucket key segments. Neither filter kind has false negatives, so the
-  two-phase result equals the plain LEFT ANTI join ``exact_new_urls``
-  (tested in tests/test_dedup.py and, engine-wide, tests/test_invariants.py).
+  per-bucket key segments. Bloom has no false negatives, so the two-phase
+  result equals the plain LEFT ANTI join ``exact_new_urls`` (tested in
+  tests/test_dedup.py and, engine-wide, tests/test_invariants.py).
+
+Bloom cannot delete, so a recrawl-TTL expiry discards the store and the
+owner rebuilds it from the shrunk table (``CrawlEngine.expire_seen``): one
+O(table) build per expiry. Measured against a segments-only probe, the
+filter pays for itself at every bucket size tried (0.1M-25M keys).
 """
 
 from __future__ import annotations
@@ -86,128 +91,6 @@ class PyBloom:
         return out
 
 
-class PyCuckoo:
-    """Cuckoo filter over int64 keys (numpy buckets): the deletable
-    alternative to Bloom the north rule names. 4-slot buckets, 16-bit
-    fingerprints, partial-key cuckoo hashing (Fan et al. 2014). Supports
-    ``delete_many`` — needed if URL-seen entries ever expire (recrawl TTL),
-    which a Bloom filter cannot do."""
-
-    SLOTS = 4
-
-    def __init__(self, n_items: int, load: float = 0.8):
-        n_buckets = 1 << max(int(n_items / (self.SLOTS * load)), 16).bit_length()
-        self.n_buckets = n_buckets
-        self.table = np.zeros((n_buckets, self.SLOTS), dtype=np.uint16)
-
-    def _fp(self, keys: np.ndarray) -> np.ndarray:
-        fp = (_mix64(keys.view(np.uint64), 0xF1) & np.uint64(0xFFFF)).astype(np.uint16)
-        return np.where(fp == 0, np.uint16(1), fp)  # 0 marks empty slots
-
-    def _i1(self, keys: np.ndarray) -> np.ndarray:
-        return (_mix64(keys.view(np.uint64), 0xA5)
-                & np.uint64(self.n_buckets - 1)).astype(np.int64)
-
-    def _alt(self, i: np.ndarray, fp: np.ndarray) -> np.ndarray:
-        return (i ^ _mix64(fp.astype(np.int64), 0xC3).astype(np.int64)) \
-            & (self.n_buckets - 1)
-
-    def add_many(self, keys: np.ndarray, max_kicks: int = 200) -> int:
-        """Insert; returns number of failed (dropped) inserts — callers
-        treat failure as 'rebuild larger', same policy as Bloom overfill.
-
-        Vectorized common path: the overwhelming majority of inserts land in
-        an empty slot of their primary or alt bucket with no kicks. Each
-        pass fills one slot column; same-bucket collisions within a pass are
-        resolved by keeping the first writer (np.unique on bucket index).
-        Only the residue (both buckets full) takes the per-key kick loop."""
-        fps, i1s = self._fp(keys), self._i1(keys)
-        alts = self._alt(i1s, fps)
-        pending = np.arange(len(keys))
-        for bucket_arr in (i1s, alts):
-            if not len(pending):
-                break
-            for slot in range(self.SLOTS):
-                if not len(pending):
-                    break
-                b = bucket_arr[pending]
-                empty = self.table[b, slot] == 0
-                if not empty.any():
-                    continue
-                cand = pending[empty]
-                # one writer per bucket this pass
-                _, first = np.unique(bucket_arr[cand], return_index=True)
-                winners = cand[first]
-                self.table[bucket_arr[winners], slot] = fps[winners]
-                placed = np.zeros(len(keys), dtype=bool)
-                placed[winners] = True
-                pending = pending[~placed[pending]]
-        failed = 0
-        for j in pending:
-            if not self._insert_one(np.uint16(fps[j]), int(i1s[j]), max_kicks):
-                failed += 1
-        return failed
-
-    def _insert_one(self, fp: np.uint16, i: int, max_kicks: int) -> bool:
-        import random
-
-        rnd = random.Random(int(fp) ^ i)  # deterministic kicks
-        for i_try in (i, int(self._alt(np.array([i]), np.array([fp]))[0])):
-            row = self.table[i_try]
-            empty = np.nonzero(row == 0)[0]
-            if len(empty):
-                row[empty[0]] = fp
-                return True
-        cur_i, cur_fp = i, fp
-        for _ in range(max_kicks):
-            slot = rnd.randrange(self.SLOTS)
-            cur_fp, self.table[cur_i, slot] = self.table[cur_i, slot], cur_fp
-            cur_i = int(self._alt(np.array([cur_i]), np.array([cur_fp]))[0])
-            row = self.table[cur_i]
-            empty = np.nonzero(row == 0)[0]
-            if len(empty):
-                row[empty[0]] = cur_fp
-                return True
-        return False
-
-    def contains_many(self, keys: np.ndarray) -> np.ndarray:
-        fps, i1s = self._fp(keys), self._i1(keys)
-        alts = self._alt(i1s, fps)
-        in1 = (self.table[i1s] == fps[:, None]).any(axis=1)
-        in2 = (self.table[alts] == fps[:, None]).any(axis=1)
-        return in1 | in2
-
-    def delete_many(self, keys: np.ndarray) -> int:
-        """Remove one fingerprint copy per present key; returns #deleted."""
-        fps, i1s = self._fp(keys), self._i1(keys)
-        alts = self._alt(i1s, fps)
-        deleted = 0
-        for fp, i1, i2 in zip(fps, i1s, alts):
-            for b in (int(i1), int(i2)):
-                hit = np.nonzero(self.table[b] == fp)[0]
-                if len(hit):
-                    self.table[b, hit[0]] = 0
-                    deleted += 1
-                    break
-        return deleted
-
-
-def _cuckoo_from_keys(keys: np.ndarray, expected: int,
-                      max_doublings: int = 6) -> PyCuckoo:
-    """Build a cuckoo filter that holds EVERY key: double capacity until
-    add_many reports 0 failures (a dropped insert would be a false negative
-    — a seen URL classified 'definitely new' — breaking the two-phase
-    filter's exactness invariant). Mirrors the Bloom overfill policy."""
-    cap = max(expected, len(keys), 16)
-    for _ in range(max_doublings):
-        cf = PyCuckoo(cap)
-        if cf.add_many(keys) == 0:
-            return cf
-        cap *= 2
-    raise RuntimeError(
-        f"cuckoo build failed at capacity {cap} for {len(keys)} keys")
-
-
 # ---------------------------------------------------------------------------
 # bucketed (partitioned) filters — the 10^10-key scale path
 
@@ -215,28 +98,30 @@ def _cuckoo_from_keys(keys: np.ndarray, expected: int,
 # incremental insert (store_apply_keys) rather than the bulk build
 NEW_BUCKET_ITEMS = 65_536
 
+# the one filter kind; stamped into every store's meta so a resumed engine
+# rebuilds, instead of reloading, a store written with another kind
+FILTER_KIND = "bloom"
+
 
 class PartitionedFilter:
     """Driver-side metadata of a FilterStore partitioned by
     ``bucket = key mod P``: the layout plus per-bucket insert counters.
 
-    Each bucket's PyBloom/PyCuckoo lives only in the store (built and
+    Each bucket's PyBloom lives only in the store (built and
     mutated executor-side) and covers only its own keys, so no single
     bitmap ever exceeds ``cap_per_bucket`` — the bucket count scales with
     the seen set instead of the fpp silently degrading past a fixed cap.
     The driver keeps counters to decide when a rebuild is due."""
 
-    def __init__(self, buckets: int, kind: str = "bloom"):
+    def __init__(self, buckets: int):
         self.buckets = int(buckets)
-        self.kind = kind
         self.inserted: dict[int, int] = {}
         self.capacity: dict[int, int] = {}  # per-bucket design n_items
         self.build_rss_mb = 0.0  # max builder-task peak RSS (evidence)
 
     def overfilled(self) -> bool:
-        """Any bucket past its own design capacity (fpp degraded / cuckoo
-        near full) → the owner should rebuild from the state table with
-        more buckets."""
+        """Any bucket past its own design capacity (fpp degraded) → the
+        owner should rebuild from the state table with more buckets."""
         return any(n > self.capacity.get(bv, NEW_BUCKET_ITEMS)
                    for bv, n in self.inserted.items())
 
@@ -250,7 +135,7 @@ def pick_buckets(expected: int, cap_per_bucket: int = 25_000_000) -> int:
 
 
 def build_partitioned(seen: DataFrame, store_path: str, key: str = "url_key",
-                      kind: str = "bloom", expected: int | None = None,
+                      expected: int | None = None,
                       buckets: int | None = None,
                       cap_per_bucket: int = 25_000_000,
                       fpp: float = 0.01) -> PartitionedFilter | None:
@@ -279,7 +164,7 @@ def build_partitioned(seen: DataFrame, store_path: str, key: str = "url_key",
         return None
     if buckets is None:
         buckets = pick_buckets(expected, cap_per_bucket)
-    P, knd, f_fpp = int(buckets), kind, fpp
+    P, f_fpp = int(buckets), fpp
     s_path = store_path
 
     # 2x headroom over the even-split load for incremental epoch inserts
@@ -324,12 +209,9 @@ def build_partitioned(seen: DataFrame, store_path: str, key: str = "url_key",
         for bv, parts in chunks.items():
             arr = parts[0] if len(parts) == 1 else np.concatenate(parts)
             parts.clear()
-            if knd == "cuckoo":
-                f = _cuckoo_from_keys(arr, max(len(arr) * 2, exp_per_bucket))
-            else:
-                f = PyBloom(max(len(arr) * 2, exp_per_bucket), f_fpp)
-                f.add_many(arr)
-            st.save_bucket_raw(bv, knd, f)
+            f = PyBloom(max(len(arr) * 2, exp_per_bucket), f_fpp)
+            f.add_many(arr)
+            st.save_bucket(bv, f)
             # exact key segment 0 (committed-state snapshot) — the store
             # probe resolves filter maybes against these instead of
             # re-scanning the url_seen table every epoch
@@ -342,7 +224,7 @@ def build_partitioned(seen: DataFrame, store_path: str, key: str = "url_key",
                                   pa.field("rss_mb", pa.float64())]))
 
     rows = keyed.mapInArrow(part_build, out_schema).collect()
-    pf = PartitionedFilter(P, kind=kind)
+    pf = PartitionedFilter(P)
     for r in rows:
         bv, n = int(r["bv"]), int(r["n"])
         pf.inserted[bv] = n
@@ -412,17 +294,14 @@ class FilterStore:
     def _bucket_path(self, bv: int) -> str:
         return os.path.join(self.path, f"bucket-{bv:06d}.npz")
 
-    def save_bucket_raw(self, bv: int, kind: str, f) -> None:
-        """Persist one bucket's filter object (called executor-side by
+    def save_bucket(self, bv: int, f: PyBloom) -> None:
+        """Persist one bucket's Bloom filter (called executor-side by
         ``build_partitioned`` and ``store_apply_keys`` so filter bytes
         never transit the driver). tmp+rename so a crash mid-write never
         leaves a torn bucket file."""
         path = self._bucket_path(bv)
         tmp = path + f".tmp-{uuid.uuid4().hex[:8]}.npz"
-        if kind == "cuckoo":
-            np.savez(tmp, kind=np.array(1), table=f.table)
-        else:
-            np.savez(tmp, kind=np.array(0), bits=f.bits, k=np.array(f.k))
+        np.savez(tmp, bits=f.bits, k=np.array(f.k))
         # np.savez appends .npz when missing; our tmp already ends in it
         os.replace(tmp, path)
 
@@ -476,23 +355,12 @@ class FilterStore:
             found[ok] |= seg[idx[ok]] == keys[ok]
         return found
 
-    def apply_key_segment(self, bv: int, seq: int, arr: "np.ndarray",
-                          mode: str = "add") -> None:
-        """Insert (new segment, maybe compact) or delete (rewrite segments
-        in place) a batch of keys for one bucket. Compaction merges every
+    def apply_key_segment(self, bv: int, seq: int, arr: "np.ndarray") -> None:
+        """Insert a batch of keys for one bucket as a new segment, first
+        compacting when the bucket has too many. Compaction merges every
         PRE-EXISTING segment into one stamped with their max seq — all of
         which belong to closed epochs, so recovery (which only drops the
         crashed epoch's seq) never undoes a compaction."""
-        arr = np.unique(np.asarray(arr, dtype=np.int64))
-        if mode == "delete":
-            for p in self.seg_paths(bv):
-                seg = np.load(p)
-                keep = seg[~np.isin(seg, arr, assume_unique=True)]
-                if len(keep) < len(seg):
-                    tmp = p + f".tmp-{uuid.uuid4().hex[:8]}.npy"
-                    np.save(tmp, keep)
-                    os.replace(tmp, p)
-            return
         old = self.seg_paths(bv)
         if len(old) >= self.SEG_COMPACT_N:
             merged = merge_sorted_unique([np.load(p, mmap_mode="r")
@@ -526,7 +394,7 @@ class FilterStore:
 
     def save_meta(self, pf: PartitionedFilter,
                   source_version: int | None = None) -> None:
-        meta = {"buckets": pf.buckets, "kind": pf.kind,
+        meta = {"buckets": pf.buckets, "kind": FILTER_KIND,
                 "inserted": {str(b): n for b, n in pf.inserted.items()},
                 "capacity": {str(b): n for b, n in pf.capacity.items()}}
         if source_version is not None:
@@ -572,24 +440,19 @@ class FilterStore:
         build_partitioned returns): probes go through the bucket files, the
         driver holds only counters. Used by the clean-resume reload path."""
         m = self.meta()
-        pf = PartitionedFilter(m["buckets"], kind=m["kind"])
+        pf = PartitionedFilter(m["buckets"])
         pf.inserted = {int(b): int(n) for b, n in m.get("inserted", {}).items()}
         pf.capacity = {int(b): int(n) for b, n in m.get("capacity", {}).items()}
         return pf
 
     @staticmethod
-    def load_bucket(path: str, bv: int):
+    def load_bucket(path: str, bv: int) -> PyBloom | None:
         """Load one bucket's filter (executor-side; returns None if the
         bucket has no keys yet)."""
         fp = os.path.join(path, f"bucket-{bv:06d}.npz")
         if not os.path.exists(fp):
             return None
         z = np.load(fp)
-        if int(z["kind"]) == 1:
-            f = PyCuckoo.__new__(PyCuckoo)
-            f.table = z["table"]
-            f.n_buckets = f.table.shape[0]
-            return f
         f = PyBloom.__new__(PyBloom)
         f.bits = z["bits"]
         f.m = len(f.bits) * 8
@@ -681,30 +544,27 @@ def split_by_filter_store(spark: SparkSession, batch: DataFrame,
 
 def store_apply_keys(spark: SparkSession, keys_df: DataFrame,
                      store_path: str, key: str = "url_key",
-                     mode: str = "add", seq: int | None = None) -> dict:
-    """Apply incremental inserts (or cuckoo deletes) to a FilterStore
-    ENTIRELY executor-side: the batch is repartitioned on ``pmod(key, P)``
-    so each task owns whole buckets, loads each bucket's file once, mutates
-    it with numpy, and writes it back atomically. The driver sees only
-    per-bucket counters — never a key (the round-2 epoch loop pulled every
-    epoch's new keys through ``toPandas`` and re-saved buckets driver-side).
+                     seq: int | None = None) -> dict[int, int]:
+    """Apply incremental inserts to a FilterStore ENTIRELY executor-side:
+    the batch is repartitioned on ``pmod(key, P)`` so each task owns whole
+    buckets, loads each bucket's file once, mutates it with numpy, and
+    writes it back atomically. The driver sees only per-bucket counters —
+    never a key (the round-2 epoch loop pulled every epoch's new keys
+    through ``toPandas`` and re-saved buckets driver-side).
 
-    Returns ``{"per_bucket": {bv: n}, "failed": int}`` — ``failed`` > 0
-    (cuckoo bucket full) means the store now misses seen keys and the owner
-    must rebuild before the next probe. Bucket counts are folded into the
+    Returns ``{bucket: n_inserted}``. Bucket counts are folded into the
     store's meta file so ``overfilled`` stays observable across epochs.
     """
     store = FilterStore(store_path)
     meta = store.meta()
-    P, knd = int(meta["buckets"]), meta["kind"]
+    P = int(meta["buckets"])
     # epoch-stamped exact segments ride along with a ``seq`` (segment
     # maintenance is as executor-side as the filters)
-    s_path, m_mode, m_seq = store_path, mode, seq
+    s_path, m_seq = store_path, seq
 
     out_schema = T.StructType([
         T.StructField("bv", T.IntegerType()),
         T.StructField("n", T.LongType()),
-        T.StructField("failed", T.LongType()),
     ])
 
     def gen(batches):
@@ -725,46 +585,20 @@ def store_apply_keys(spark: SparkSession, keys_df: DataFrame,
         for bv, parts in chunks.items():
             arr = parts[0] if len(parts) == 1 else np.concatenate(parts)
             f = FilterStore.load_bucket(s_path, bv)
-            failed = 0
-            if m_mode == "delete":
-                if m_seq is not None:
-                    # deleting a key a cuckoo filter never held can evict
-                    # ANOTHER key's (bucket, fingerprint) entry — a false
-                    # negative for a still-present key. The exact segments
-                    # are the record of what was inserted: restrict the
-                    # delete to segment-present keys (r6; callers may pass
-                    # supersets, e.g. TTL-expired keys some of which never
-                    # entered this store).
-                    arr = arr[st.contains_exact(bv, arr)]
-                if len(arr) and isinstance(f, PyCuckoo):
-                    f.delete_many(arr)
-                    st.save_bucket_raw(bv, "cuckoo", f)
-                # Bloom buckets can't delete — owner rebuilds instead
-                # (the EXACT segments always can, and must, so a Bloom
-                # store stays exact even while its filter over-approximates)
-                if m_seq is not None and len(arr):
-                    st.apply_key_segment(bv, m_seq, arr, mode="delete")
-            else:
-                if f is None:
-                    f = (PyCuckoo(max(len(arr) * 2, NEW_BUCKET_ITEMS))
-                         if knd == "cuckoo"
-                         else PyBloom(max(len(arr) * 2, NEW_BUCKET_ITEMS)))
-                if isinstance(f, PyCuckoo):
-                    failed = f.add_many(arr)
-                else:
-                    # loaded Bloom bits may be read-only (np.load mmap) —
-                    # bitwise_or.at needs a writable buffer
-                    if not f.bits.flags.writeable:
-                        f.bits = f.bits.copy()
-                    f.add_many(arr)
-                st.save_bucket_raw(bv, knd, f)
-                if m_seq is not None:
-                    st.apply_key_segment(bv, m_seq, arr)
+            if f is None:
+                f = PyBloom(max(len(arr) * 2, NEW_BUCKET_ITEMS))
+            elif not f.bits.flags.writeable:
+                # loaded bits may be read-only (np.load mmap) —
+                # bitwise_or.at needs a writable buffer
+                f.bits = f.bits.copy()
+            f.add_many(arr)
+            st.save_bucket(bv, f)
+            if m_seq is not None:
+                st.apply_key_segment(bv, m_seq, arr)
             yield pa.RecordBatch.from_pydict(
-                {"bv": [bv], "n": [len(arr)], "failed": [failed]},
+                {"bv": [bv], "n": [len(arr)]},
                 schema=pa.schema([pa.field("bv", pa.int32()),
-                                  pa.field("n", pa.int64()),
-                                  pa.field("failed", pa.int64())]))
+                                  pa.field("n", pa.int64())]))
 
     routed = keys_df.select(
         F.col(key).cast("long").alias("k"),
@@ -772,15 +606,13 @@ def store_apply_keys(spark: SparkSession, keys_df: DataFrame,
     ).repartition(min(P, 256), "b")
     rows = routed.mapInArrow(gen, out_schema).collect()
     per_bucket = {int(r["bv"]): int(r["n"]) for r in rows}
-    failed = sum(int(r["failed"]) for r in rows)
     # fold counters into the meta file (tiny JSON — no keys)
-    sign = -1 if mode == "delete" else 1
     ins = {int(b): n for b, n in meta.get("inserted", {}).items()}
     for bv, n in per_bucket.items():
-        ins[bv] = max(0, ins.get(bv, 0) + sign * n)
+        ins[bv] = ins.get(bv, 0) + n
     meta["inserted"] = {str(b): n for b, n in ins.items()}
     store.write_meta(meta)
-    return {"per_bucket": per_bucket, "failed": failed}
+    return per_bucket
 
 
 def seen_updates(new_rows: DataFrame, epoch: int, buckets: int = 64) -> DataFrame:

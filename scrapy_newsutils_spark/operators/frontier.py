@@ -242,14 +242,6 @@ def remove_popped(frontier: DataFrame, popped: DataFrame) -> DataFrame:
     return frontier.join(popped.select("url_key"), "url_key", "left_anti")
 
 
-def add_discoveries(frontier: DataFrame, new_urls: DataFrame, epoch: int) -> DataFrame:
-    """Insert newly-discovered URLs (already keyed + deduped against both
-    the frontier and url_seen by the caller), stamping ``epoch_added``."""
-    cols = frontier.columns
-    additions = new_urls.withColumn("epoch_added", F.lit(epoch)).select(cols)
-    return frontier.unionByName(additions)
-
-
 def opic_cash_update(frontier: DataFrame, popped_with_outlinks: DataFrame) -> DataFrame:
     """OPIC-style priority refresh: each popped page distributes its 'cash'
     (priority) equally over its outlinks; frontier rows that are targets

@@ -105,7 +105,7 @@ class CrawlEngine:
     # pmod(url_key, P), so executor memory stays bounded at 10^10 keys.
     # False: plain LEFT ANTI joins against the tables (the reference).
     use_bloom: bool = True
-    filter_kind: str = "bloom"  # 'bloom' | 'cuckoo' (deletable variant)
+    filter_kind: str = dedup.FILTER_KIND  # the only kind; others raise
     # per-bucket key capacity of the partitioned URL-seen filter (~32 MB
     # bitmap at 10 bits/key); bucket count scales with the seen set
     filter_cap_per_bucket: int = 25_000_000
@@ -127,6 +127,10 @@ class CrawlEngine:
             raise ValueError(
                 f"filter_probe={self.filter_probe!r}: the filter store is the "
                 "only URL-seen probe ('store')")
+        if self.filter_kind != dedup.FILTER_KIND:
+            raise ValueError(
+                f"filter_kind={self.filter_kind!r}: the URL-seen filter is "
+                f"{dedup.FILTER_KIND!r} only")
         self.frontier_t = SnapshotTable(os.path.join(self.root, "frontier"), schemas.FRONTIER)
         self.url_seen_t = SnapshotTable(os.path.join(self.root, "url_seen"), schemas.URL_SEEN)
         self.fetched_t = SnapshotTable(os.path.join(self.root, "fetched"), schemas.FETCHED)
@@ -136,27 +140,22 @@ class CrawlEngine:
         # (executor-side per-bucket builds), extended incrementally per
         # epoch; the driver keeps only its PartitionedFilter counters. A
         # fresh engine — i.e. a resumed job — reloads or rebuilds it; an
-        # overfilled or insert-failed filter is discarded and rebuilt with
-        # more buckets (never silently degraded).
+        # overfilled filter is discarded and rebuilt with more buckets
+        # (never silently degraded).
         self._filter: dedup.PartitionedFilter | None = None
         # frontier-MEMBERSHIP filter sidecar: discovery dedup
         # probes this instead of anti-joining outlinks against the FULL
         # frontier key set — the round-4 loop's one remaining O(frontier)
         # shuffle per epoch (~80 GB of keys at 10^10 rows, VERDICT r4 #1).
-        # Maintenance is kind-dependent (r6, VERDICT r5 #3):
-        # - cuckoo: EXACTLY-LIVE — discovery adds + per-epoch pop-deletes
-        #   (segment-verified, O(popped), executor-side), so the sidecar is
-        #   precisely the live frontier key set and recrawl-TTL expiry
-        #   needs no sidecar action at all.
-        # - bloom (cannot delete): discovery append only; a stale 'present'
-        #   for a key that left the frontier is EXACTNESS-PRESERVING
-        #   because every frontier-removed key is in url_seen (attempted →
-        #   seen_updates; duplicates were already seen), so the outlink is
-        #   dropped either way and its cash dies at compaction's left join
-        #   in both paths (expire_seen also purges its queued cash —
-        #   ADVICE r5). The one divergence — TTL expiry re-opening a key —
-        #   invalidates the filter, forcing a rebuild from the (shrunk)
-        #   table on the next discovery epoch.
+        # Bloom cannot delete, so the sidecar only grows (discovery
+        # appends); a stale 'present' for a key that left the frontier is
+        # EXACTNESS-PRESERVING because every frontier-removed key is in
+        # url_seen (attempted → seen_updates; duplicates were already
+        # seen), so the outlink is dropped either way and its cash dies at
+        # compaction's left join in both paths (expire_seen also purges its
+        # queued cash — ADVICE r5). The one divergence — TTL expiry
+        # re-opening a key — invalidates both sidecars, which rebuild from
+        # the (shrunk) tables at their next probe.
         self._frontier_filter: dedup.PartitionedFilter | None = None
         # approximate |hosts|, computed once per engine: gates the frontier
         # pop's narrow-vs-wide plan without a per-epoch distinct scan
@@ -277,8 +276,8 @@ class CrawlEngine:
         # expected >= 1024, so build_partitioned never returns None: an
         # EMPTY url_seen yields a store whose probe reads every key as new
         self._filter = dedup.build_partitioned(
-            seen, self._filter_store_dir(), kind=self.filter_kind,
-            expected=expected, cap_per_bucket=self.filter_cap_per_bucket)
+            seen, self._filter_store_dir(), expected=expected,
+            cap_per_bucket=self.filter_cap_per_bucket)
         store.stamp_source(self.url_seen_t.current_version())
         return self._filter
 
@@ -289,34 +288,30 @@ class CrawlEngine:
         counters, zero key materialization."""
         if self._filter is None:
             return
-        store = dedup.FilterStore(self._filter_store_dir())
-        res = dedup.store_apply_keys(
+        added = dedup.store_apply_keys(
             self.spark, keys_df.select("url_key"),
             self._filter_store_dir(), seq=epoch)
-        if res["failed"]:  # cuckoo bucket full — rebuild before probing
-            self._filter = None
-            store.stamp_source(None)  # contents no longer reloadable
-            return
-        for bv, n in res["per_bucket"].items():
+        for bv, n in added.items():
             self._filter.inserted[bv] = \
                 self._filter.inserted.get(bv, 0) + n
         # persist counters + the source stamp: a clean resume reloads
         # this exact state instead of rebuilding (VERDICT r5 #2)
-        store.save_meta(self._filter,
-                        source_version=self.url_seen_t.current_version())
+        dedup.FilterStore(self._filter_store_dir()).save_meta(
+            self._filter, source_version=self.url_seen_t.current_version())
 
     def _reload_store(self, store_dir: str,
                       table_version: int) -> dedup.PartitionedFilter | None:
         """Reload a persisted filter store when its source stamp matches the
-        table's current version (and the filter kind matches); None = must
-        rebuild. The stamp is written after every build/extend and cleared
-        on invalidation, so a matching stamp certifies the bucket files +
+        table's current version and it was written with this filter kind
+        (an older build may have left a cuckoo store); None = must rebuild.
+        The stamp is written after every build/extend and cleared on
+        invalidation, so a matching stamp certifies the bucket files +
         exact segments reflect exactly the stamped table state."""
         store = dedup.FilterStore(store_dir)
         try:
             if store.source_version() != int(table_version):
                 return None
-            if store.meta().get("kind") != self.filter_kind:
+            if store.meta().get("kind") != dedup.FILTER_KIND:
                 return None
             return store.load_meta_only()
         except Exception:
@@ -353,8 +348,8 @@ class CrawlEngine:
         store = dedup.FilterStore(self._frontier_filter_dir())
         store.clear()  # stale buckets of an old layout must not probe
         self._frontier_filter = dedup.build_partitioned(
-            frontier, self._frontier_filter_dir(), kind=self.filter_kind,
-            expected=expected, cap_per_bucket=self.filter_cap_per_bucket)
+            frontier, self._frontier_filter_dir(), expected=expected,
+            cap_per_bucket=self.filter_cap_per_bucket)
         # expected >= 1024 above, so build_partitioned never returns None:
         # an EMPTY frontier yields a zero-bucket store whose probe reads
         # every key as definitely-new — the correct degenerate answer.
@@ -365,14 +360,10 @@ class CrawlEngine:
         (executor-side bucket-file merges; driver folds back counters)."""
         if self._frontier_filter is None:
             return
-        res = dedup.store_apply_keys(
+        added = dedup.store_apply_keys(
             self.spark, keys_df.select("url_key"),
             self._frontier_filter_dir(), seq=epoch)
-        if res["failed"]:  # cuckoo bucket full — rebuild before next probe
-            self._frontier_filter = None
-            dedup.FilterStore(self._frontier_filter_dir()).stamp_source(None)
-            return
-        for bv, n in res["per_bucket"].items():
+        for bv, n in added.items():
             self._frontier_filter.inserted[bv] = \
                 self._frontier_filter.inserted.get(bv, 0) + n
 
@@ -744,12 +735,12 @@ class CrawlEngine:
                                             frontier_v)
                     if pf is not None and not pf.overfilled():
                         self._frontier_filter = pf
-                # the epoch's sidecar mutations (discovery adds; cuckoo
-                # pop-deletes below) make the store transiently inconsistent
-                # with every committed frontier version — clear the resume
-                # stamp now and restore it at the epoch close, so a crash in
-                # between forces the rebuild path instead of reloading a
-                # half-mutated store (VERDICT r5 #2 safety).
+                # the epoch's discovery adds make the sidecar transiently
+                # inconsistent with every committed frontier version —
+                # clear the resume stamp now and restore it at the epoch
+                # close, so a crash in between forces the rebuild path
+                # instead of reloading a half-mutated store (VERDICT r5 #2
+                # safety).
                 dedup.FilterStore(self._frontier_filter_dir()).stamp_source(None)
         expected_fv = frontier_v
         delete_dir = None
@@ -793,22 +784,6 @@ class CrawlEngine:
             fv = self._compact_frontier(epoch)
 
         if self._frontier_filter is not None:
-            if self.filter_kind == "cuckoo":
-                # EXACTLY-LIVE sidecar maintenance (VERDICT r5 #3): delete
-                # this epoch's removed frontier keys (attempted + dups)
-                # executor-side — segment-verified, O(popped) — so the
-                # sidecar tracks precisely the live frontier key set. With
-                # that invariant a recrawl-TTL expiry needs NO sidecar
-                # action at all (expiry touches url_seen only), replacing
-                # round 5's wholesale invalidate→O(frontier) rebuild.
-                # Bloom sidecars cannot delete and keep the stale-present
-                # semantics + rebuild-on-expiry.
-                res = dedup.store_apply_keys(
-                    spark, remove.select("url_key"),
-                    self._frontier_filter_dir(), mode="delete", seq=epoch)
-                for bv, d in res["per_bucket"].items():
-                    self._frontier_filter.inserted[bv] = max(
-                        0, self._frontier_filter.inserted.get(bv, 0) - d)
             # stamp the sidecar with the frontier version this epoch closed
             # at: a clean resume reloads it instead of rebuilding from a
             # full frontier scan (VERDICT r5 #2). Counters ride along so
@@ -862,11 +837,10 @@ class CrawlEngine:
     def expire_seen(self, epoch_age: int) -> int:
         """Recrawl TTL: forget URLs first seen more than ``epoch_age``
         epochs ago so a later discovery fetches them again. The url_seen
-        rows go as an MoR equality-delete delta (O(expired), not O(table));
-        the cuckoo filter forgets the keys IN PLACE via delete_many — the
-        capability the deletable variant exists for (dedup.py PyCuckoo) —
-        while a Bloom filter, which cannot delete, is discarded and rebuilt
-        from the table at the next probe. Returns #expired."""
+        rows go as an MoR equality-delete delta (O(expired), not O(table)).
+        Bloom filters cannot delete, so both filter sidecars (url_seen and
+        frontier membership) are discarded and rebuilt from their tables at
+        the next probe. Returns #expired."""
         spark = self.spark
         cur = self.last_epoch()
         seen = self.url_seen_t.read(spark)
@@ -898,41 +872,16 @@ class CrawlEngine:
             .select("url_key", "epoch").distinct())
         self.cash_t.delete_by_keys(dead_cash, ["url_key", "epoch"],
                                    meta={"epoch": cur, "ttl_cash_purge": n})
-        if self.filter_kind == "cuckoo" and self._filter is not None:
-            # executor-side in-place deletes on the bucket files — expired
-            # keys never reach the driver
-            res = dedup.store_apply_keys(
-                spark, expired.select("url_key"),
-                self._filter_store_dir(), mode="delete", seq=cur)
-            for bv, d in res["per_bucket"].items():
-                self._filter.inserted[bv] = max(
-                    0, self._filter.inserted.get(bv, 0) - d)
-            # deletes applied in place: re-stamp at the post-expiry table
-            # version so a clean resume still reloads
-            dedup.FilterStore(self._filter_store_dir()).save_meta(
-                self._filter,
-                source_version=self.url_seen_t.current_version())
-        else:
-            self._filter = None  # Bloom can't delete: rebuild lazily
-            if self.use_bloom:
-                # stale store must not be reloaded on a later resume
-                dedup.FilterStore(self._filter_store_dir()).stamp_source(None)
-        # frontier-membership sidecar under expiry (VERDICT r5 #3):
-        # - cuckoo kind: the sidecar is maintained EXACTLY-LIVE (discovery
-        #   adds + per-epoch pop-deletes at close), so expiry — which only
-        #   touches url_seen — leaves it valid: expired URLs re-discovered
-        #   later read definitely-new at the sidecar, then pass the
-        #   (now-shrunk) url_seen store. No invalidation, no rebuild.
-        # - bloom kind: cannot delete, so the sidecar carries stale
-        #   'present' keys that are only safe while url_seen holds them;
-        #   expiry re-opens those keys → invalidate and rebuild from the
-        #   table before the next discovery probe, or the expired URLs
-        #   could never be re-discovered.
-        if not (self.filter_kind == "cuckoo"
-                and self._frontier_filter is not None):
-            self._frontier_filter = None
-            if self.use_bloom:
-                dedup.FilterStore(self._frontier_filter_dir()).stamp_source(None)
+        # Bloom can't forget keys: both sidecars rebuild lazily. The
+        # frontier sidecar's stale 'present' keys are only safe while
+        # url_seen holds them, and expiry re-opens those keys — without a
+        # rebuild the expired URLs could never be re-discovered.
+        self._filter = None
+        self._frontier_filter = None
+        if self.use_bloom:
+            # stale stores must not be reloaded on a later resume
+            for d in (self._filter_store_dir(), self._frontier_filter_dir()):
+                dedup.FilterStore(d).stamp_source(None)
         return n
 
     def run(self, epochs: int) -> list[EpochResult]:

@@ -117,8 +117,3 @@ def get_spark(
     _warmup(spark)
     return spark
 
-
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

@@ -490,7 +490,3 @@ class SnapshotTable:
     def empty(self, spark: SparkSession) -> DataFrame:
         return spark.createDataFrame([], self.schema)
 
-
-def as_rows(df: DataFrame, *cols: str) -> DataFrame:
-    """Project + stable order helper for tests."""
-    return df.select(*cols).orderBy(*[F.col(c) for c in cols])

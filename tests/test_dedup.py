@@ -85,42 +85,37 @@ def test_partitioned_filter_no_false_negatives_and_routing(spark, tmp_path):
     keys = rng.integers(-(2**62), 2**62, size=30_000, dtype=np.int64)
     probe = rng.integers(0, 2**62, size=30_000, dtype=np.int64)
     probe = probe[~np.isin(probe, keys)]
-    for kind in ("bloom", "cuckoo"):
-        sp = str(tmp_path / kind)
-        dedup.build_partitioned(_keys_df(spark, keys[:15_000]), sp,
-                                kind=kind, buckets=7)
-        res = dedup.store_apply_keys(spark, _keys_df(spark, keys[15_000:]), sp)
-        assert res["failed"] == 0, kind
-        b, n = np.unique(keys % 7, return_counts=True)
-        meta = dedup.FilterStore(sp).meta()
-        assert {int(k): int(v) for k, v in meta["inserted"].items()} == \
-            dict(zip(b.tolist(), n.tolist())), kind
-        tagged = dedup.tag_by_filter_store(
-            spark, _keys_df(spark, np.concatenate([keys, probe])), sp)
-        maybe = {r["url_key"]: r["_maybe"] for r in tagged.collect()}
-        assert all(maybe[int(k)] for k in keys), kind
-        # disjoint probes mostly rejected (fast path does real work)
-        fpr = np.mean([maybe[int(k)] for k in probe])
-        assert fpr < 0.05, (kind, fpr)
+    sp = str(tmp_path / "bloom")
+    dedup.build_partitioned(_keys_df(spark, keys[:15_000]), sp, buckets=7)
+    dedup.store_apply_keys(spark, _keys_df(spark, keys[15_000:]), sp)
+    b, n = np.unique(keys % 7, return_counts=True)
+    meta = dedup.FilterStore(sp).meta()
+    assert {int(k): int(v) for k, v in meta["inserted"].items()} == \
+        dict(zip(b.tolist(), n.tolist()))
+    tagged = dedup.tag_by_filter_store(
+        spark, _keys_df(spark, np.concatenate([keys, probe])), sp)
+    maybe = {r["url_key"]: r["_maybe"] for r in tagged.collect()}
+    assert all(maybe[int(k)] for k in keys)
+    # disjoint probes mostly rejected (fast path does real work)
+    fpr = np.mean([maybe[int(k)] for k in probe])
+    assert fpr < 0.05, fpr
 
 
 def test_build_partitioned_matches_exact(spark, tmp_path, frontier_df,
                                         url_seen_df):
     """Distributed per-bucket build + two-phase membership == plain anti-join,
-    for both filter kinds, with a multi-bucket layout (cap forces >1 bucket)."""
+    with a multi-bucket layout (cap forces >1 bucket)."""
     exact = _keys(dedup.exact_new_urls(frontier_df, url_seen_df))
     n_seen = url_seen_df.count()
-    for kind in ("bloom", "cuckoo"):
-        sp = str(tmp_path / kind)
-        pf = dedup.build_partitioned(url_seen_df, sp, kind=kind,
-                                     cap_per_bucket=max(n_seen // 3, 8))
-        assert pf is not None and pf.buckets > 1  # the cap forced bucketing
-        new_s, maybe_s = dedup.split_by_filter_store(spark, frontier_df, sp)
-        got = _keys(new_s) | _keys(dedup.exact_new_urls(maybe_s, url_seen_df))
-        assert got == exact, kind
-        new_x, _ = dedup.split_by_filter_store(spark, frontier_df, sp,
-                                               exact=True)
-        assert _keys(new_x) == exact, kind
+    sp = str(tmp_path / "bloom")
+    pf = dedup.build_partitioned(url_seen_df, sp,
+                                 cap_per_bucket=max(n_seen // 3, 8))
+    assert pf is not None and pf.buckets > 1  # the cap forced bucketing
+    new_s, maybe_s = dedup.split_by_filter_store(spark, frontier_df, sp)
+    got = _keys(new_s) | _keys(dedup.exact_new_urls(maybe_s, url_seen_df))
+    assert got == exact
+    new_x, _ = dedup.split_by_filter_store(spark, frontier_df, sp, exact=True)
+    assert _keys(new_x) == exact
 
 
 def test_partitioned_filter_overfill_detected(spark, tmp_path):
@@ -150,7 +145,7 @@ def test_build_partitioned_store_direct_write(spark, tmp_path, frontier_df,
     back only counters (the 10^10 path — 800 x 32 MB buckets must not be
     collected). The store probe must equal the plain anti-join."""
     sp = str(tmp_path / "filters")
-    pf = dedup.build_partitioned(url_seen_df, sp, kind="bloom",
+    pf = dedup.build_partitioned(url_seen_df, sp,
                                  cap_per_bucket=max(url_seen_df.count() // 3, 8))
     assert pf is not None and pf.buckets > 1
     # metadata-only on the driver: counters, no filter arrays
@@ -197,40 +192,19 @@ def test_build_partitioned_scale_memory_budget(spark, tmp_path):
     assert maybe.count() == 2000
 
 
-def test_cuckoo_bulk_insert_matches_membership():
-    """Vectorized add_many fast path: every successfully-inserted key is
-    found; zero failures at sane load; duplicates allowed."""
-    rng = np.random.default_rng(5)
-    keys = rng.integers(-(2**62), 2**62, size=40_000, dtype=np.int64)
-    cf = dedup.PyCuckoo(len(keys))
-    assert cf.add_many(keys) == 0
-    assert bool(cf.contains_many(keys).all())
-    # deletions still work after the bulk path
-    assert cf.delete_many(keys[:100]) == 100
-
-
-def test_cuckoo_from_keys_doubles_until_fit():
-    rng = np.random.default_rng(9)
-    keys = rng.integers(0, 2**62, size=5_000, dtype=np.int64)
-    # deliberately undersized expectation: builder must double, not drop
-    cf = dedup._cuckoo_from_keys(keys, expected=64)
-    assert bool(cf.contains_many(keys).all())
-
-
 def test_store_apply_keys_executor_side(spark, tmp_path, url_seen_df):
-    """Incremental store inserts/deletes run executor-side: after
-    store_apply_keys the store probe sees the new keys, counters land in
-    meta, and (cuckoo) deletes forget them in place."""
+    """Incremental store inserts run executor-side: after store_apply_keys
+    the store probe sees the new keys and counters land in meta."""
     from pyspark.sql import functions as F
 
     sp = str(tmp_path / "filters")
-    pf = dedup.build_partitioned(url_seen_df, sp, kind="cuckoo",
+    pf = dedup.build_partitioned(url_seen_df, sp,
                                  cap_per_bucket=max(url_seen_df.count() // 3, 8))
     assert pf.buckets > 1
     extra = spark.range(1_000_000, 1_000_400).select(
         F.xxhash64("id").alias("url_key"))
-    res = dedup.store_apply_keys(spark, extra, sp)
-    assert res["failed"] == 0 and sum(res["per_bucket"].values()) == 400
+    added = dedup.store_apply_keys(spark, extra, sp)
+    assert sum(added.values()) == 400
     # probe via store: all inserted keys are maybe-seen now
     _, maybe = dedup.split_by_filter_store(spark, extra, sp)
     assert maybe.count() == 400
@@ -238,11 +212,6 @@ def test_store_apply_keys_executor_side(spark, tmp_path, url_seen_df):
     meta = dedup.FilterStore(sp).meta()
     assert sum(int(n) for n in meta["inserted"].values()) == \
         url_seen_df.count() + 400
-    # executor-side delete (cuckoo): keys forgotten in place
-    res_d = dedup.store_apply_keys(spark, extra, sp, mode="delete")
-    assert sum(res_d["per_bucket"].values()) == 400
-    new_after, maybe_after = dedup.split_by_filter_store(spark, extra, sp)
-    assert new_after.count() == 400 and maybe_after.count() == 0
 
 
 def test_split_store_exact_matches_anti_join(spark, tmp_path, frontier_df,
@@ -253,7 +222,7 @@ def test_split_store_exact_matches_anti_join(spark, tmp_path, frontier_df,
     from pyspark.sql import functions as F
 
     sp = str(tmp_path / "filters")
-    dedup.build_partitioned(url_seen_df, sp, kind="bloom",
+    dedup.build_partitioned(url_seen_df, sp,
                             cap_per_bucket=max(url_seen_df.count() // 3, 8))
     new_s, seen_s = dedup.split_by_filter_store(spark, frontier_df, sp,
                                                 exact=True)
@@ -283,7 +252,7 @@ def test_segment_compaction_preserves_membership(spark, tmp_path, url_seen_df):
     from pyspark.sql import functions as F
 
     sp = str(tmp_path / "filters")
-    dedup.build_partitioned(url_seen_df, sp, kind="bloom", buckets=2)
+    dedup.build_partitioned(url_seen_df, sp, buckets=2)
     st = dedup.FilterStore(sp)
     for e in range(1, st.SEG_COMPACT_N + 3):
         batch = spark.range(e * 10_000, e * 10_000 + 50).select(
@@ -358,7 +327,7 @@ def test_store_meta_writes_are_atomic(spark, tmp_path, url_seen_df,
     import builtins
 
     sp = str(tmp_path / "filters")
-    dedup.build_partitioned(url_seen_df, store_path=sp, kind="cuckoo")
+    dedup.build_partitioned(url_seen_df, store_path=sp)
     real_open = builtins.open
 
     def guarded(file, mode="r", *a, **k):
@@ -369,8 +338,8 @@ def test_store_meta_writes_are_atomic(spark, tmp_path, url_seen_df,
     monkeypatch.setattr(builtins, "open", guarded)
     extra = spark.range(3_000_000, 3_000_050).select(
         F.xxhash64("id").alias("url_key"))
-    res = dedup.store_apply_keys(spark, extra, sp, seq=1)
-    assert sum(res["per_bucket"].values()) == 50
+    added = dedup.store_apply_keys(spark, extra, sp, seq=1)
+    assert sum(added.values()) == 50
     store = dedup.FilterStore(sp)
     store.stamp_source(7)
     assert store.source_version() == 7

@@ -1,34 +1,14 @@
-"""Link discovery + OPIC cash (S2-analog, frontier growth) and the cuckoo
-filter variant of the URL-seen sidecar."""
+"""Link discovery + OPIC cash (S2-analog, frontier growth) and the
+frontier-membership filter sidecar."""
 
 from __future__ import annotations
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from scrapy_newsutils_spark import fixtures
 from scrapy_newsutils_spark.operators import dedup
 from scrapy_newsutils_spark.plans.epoch import CrawlEngine, _synth_outlinks
-
-
-# -- cuckoo filter -------------------------------------------------------------
-
-def test_cuckoo_membership_and_delete():
-    rng = np.random.default_rng(3)
-    keys = rng.integers(-(2**62), 2**62, size=30_000, dtype=np.int64)
-    cf = dedup.PyCuckoo(len(keys))
-    failed = cf.add_many(keys)
-    assert failed == 0
-    assert bool(cf.contains_many(keys).all())
-    probe = rng.integers(-(2**62), -1, size=30_000, dtype=np.int64)
-    fpr = cf.contains_many(probe).mean()
-    assert fpr < 0.01, fpr  # 16-bit fingerprints → ~2^-13 per bucket pair
-    # deletion — the capability Bloom lacks
-    victims = keys[:1000]
-    assert cf.delete_many(victims) == 1000
-    assert cf.contains_many(victims).mean() < 0.01
-    assert bool(cf.contains_many(keys[1000:]).all())
 
 
 # -- synthetic outlink generation ----------------------------------------------
@@ -432,53 +412,45 @@ def test_clean_resume_reloads_filter_stores(spark, tmp_path, frontier_df,
         assert ka == kb, attr
 
 
-def test_cuckoo_expiry_rediscovery_without_sidecar_rebuild(
-        spark, tmp_path, frontier_df, images_df, robots_df, url_seen_df,
-        monkeypatch):
-    """VERDICT r5 #3: with the cuckoo (deletable) kind the frontier sidecar
-    is maintained exactly-live, so a recrawl-TTL expiry triggers NO sidecar
-    rebuild — and expired URLs are still re-discoverable, with state parity
-    vs the exact engine (use_bloom=False) running the same schedule, before
-    and after a compaction folds the queued cash."""
-    from scrapy_newsutils_spark.operators import dedup as dedup_mod
+def test_resume_rebuilds_store_of_another_kind(spark, tmp_path, frontier_df,
+                                               images_df, robots_df,
+                                               url_seen_df, monkeypatch):
+    """A state root written by an older build may hold cuckoo stores. Their
+    source stamps still match the tables, so only the meta ``kind`` tells
+    them apart: a resumed engine must rebuild both sidecars instead of
+    reloading them, and converge to the exact engine's state."""
+    a = _run_disco(spark, str(tmp_path / "ka"), frontier_df, images_df,
+                   robots_df, url_seen_df, use_bloom=False, epochs=3)
+    b = _run_disco(spark, str(tmp_path / "kb"), frontier_df, images_df,
+                   robots_df, url_seen_df, epochs=2)
+    store_dirs = {b._filter_store_dir(), b._frontier_filter_dir()}
+    del b
+    for d in store_dirs:
+        st = dedup.FilterStore(d)
+        meta = st.meta()
+        assert meta["kind"] == "bloom" and "source_version" in meta
+        meta["kind"] = "cuckoo"
+        st.write_meta(meta)
 
-    def run(use_bloom, root):
-        eng = CrawlEngine(spark, root, images=images_df, robots=robots_df,
-                          top_k=4, salts=4, use_bloom=use_bloom,
-                          filter_kind="cuckoo", filter_cap_per_bucket=300,
-                          discovery_fanout=3, discovery_images=200,
-                          compact_every=100)
-        eng.bootstrap(frontier_df, url_seen_df)
-        eng.run(2)
-        eng.expire_seen(0)
-        return eng
+    built = []
+    real_build = dedup.build_partitioned
 
-    a = run(False, str(tmp_path / "ea"))
-    b = run(True, str(tmp_path / "eb"))
+    def recording_build(seen, store_path, *args, **kw):
+        built.append(store_path)
+        return real_build(seen, store_path, *args, **kw)
 
-    calls = {"n": 0}
-    real_build = dedup_mod.build_partitioned
-
-    def counting_build(*args, **kw):
-        calls["n"] += 1
-        return real_build(*args, **kw)
-
-    monkeypatch.setattr(dedup_mod, "build_partitioned", counting_build)
-    a.run(2)
-    b.run(2)  # post-expiry epochs: re-discovery of expired URLs
-    assert calls["n"] == 0, "cuckoo expiry must not rebuild the sidecar"
+    monkeypatch.setattr(dedup, "build_partitioned", recording_build)
+    b2 = CrawlEngine(spark, str(tmp_path / "kb"), images=images_df,
+                     robots=robots_df, top_k=4, salts=4,
+                     filter_cap_per_bucket=300,
+                     discovery_fanout=3, discovery_images=200)
+    b2.run(1)
+    assert set(built) == store_dirs, built
+    for d in store_dirs:
+        assert dedup.FilterStore(d).meta()["kind"] == "bloom"
     for attr in ("frontier_t", "url_seen_t", "fetched_t"):
         ka = sorted(r["url_key"] for r in
                     getattr(a, attr).read(spark).select("url_key").collect())
         kb = sorted(r["url_key"] for r in
-                    getattr(b, attr).read(spark).select("url_key").collect())
+                    getattr(b2, attr).read(spark).select("url_key").collect())
         assert ka == kb, attr
-
-    def priorities(eng):
-        return sorted((r["url_key"], round(r["priority"], 9)) for r in
-                      eng.frontier_t.read(spark).collect())
-
-    assert priorities(a) == priorities(b)
-    for eng in (a, b):
-        eng._compact_frontier(eng.last_epoch())
-    assert priorities(a) == priorities(b)

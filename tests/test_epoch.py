@@ -171,15 +171,14 @@ def test_commit_conflict_detection(spark, tmp_path, frontier_df, images_df,
 def test_expire_seen_recrawl_ttl(spark, tmp_path, frontier_df, images_df,
                                  robots_df, url_seen_df):
     """Recrawl TTL: expired url_seen rows disappear via an MoR delete
-    delta; the cuckoo filter store forgets the keys in place (executor-side
-    delete_many — the deletable variant's purpose); a URL re-seen later
+    delta; the Bloom filter store, which cannot delete, is discarded and
+    its rebuild reads every expired key as new; a URL re-seen later
     appends a new row that SURVIVES the old delete (delete keyed on
     url_key+epoch)."""
     from scrapy_newsutils_spark.operators import dedup as DD
 
     eng = CrawlEngine(spark, str(tmp_path / "ttl"), images=images_df,
-                      robots=robots_df, top_k=4, salts=4,
-                      filter_kind="cuckoo")
+                      robots=robots_df, top_k=4, salts=4)
     eng.bootstrap(frontier_df, url_seen_df)
     eng.run(1)
     seen_keys = [r["url_key"] for r in
@@ -188,21 +187,22 @@ def test_expire_seen_recrawl_ttl(spark, tmp_path, frontier_df, images_df,
     n_before = len(seen_keys)
     assert n_before > 0
 
-    def filter_hit_share() -> float:
-        # the approximate filter alone (exact=False): the cuckoo buckets
-        tagged = DD.tag_by_filter_store(spark, seen, eng._filter_store_dir())
+    def filter_hit_share(exact: bool) -> float:
+        tagged = DD.tag_by_filter_store(spark, seen, eng._filter_store_dir(),
+                                        exact=exact)
         return tagged.where("_maybe").count() / n_before
 
     eng._get_bloom()
-    assert filter_hit_share() == 1.0
+    # the approximate filter alone (exact=False) holds every seen key
+    assert filter_hit_share(exact=False) == 1.0
 
     dropped = eng.expire_seen(0)  # everything is older than 0 epochs
     assert dropped == n_before
     assert eng.url_seen_t.count(spark) == 0
-    # in-place forget: most expired keys no longer hit (residual collisions
-    # from shared 16-bit fingerprints are false POSITIVES — harmless)
-    assert eng._filter is not None  # no rebuild needed for cuckoo
-    assert filter_hit_share() < 0.1
+    # Bloom can't forget: the store is dropped and rebuilt from the table
+    assert eng._filter is None
+    eng._get_bloom()
+    assert filter_hit_share(exact=True) == 0.0
 
     # a re-seen URL survives the old delete delta
     one = spark.createDataFrame(

@@ -1,5 +1,5 @@
 """Cross-cutting invariants: end-to-end pixel PSNR + caption equality on
-fetched rows (the input_hint's per-row gate), cuckoo-filter engine parity,
+fetched rows (the input_hint's per-row gate), filter-store engine parity,
 C3 scalars, pluggable metapost link factory."""
 
 from __future__ import annotations
@@ -38,28 +38,14 @@ def test_fetched_rows_decode_to_reference_pixels(spark, tmp_path, frontier_df,
         assert r["caption"] == fixtures.caption_for(i)
 
 
-def test_cuckoo_engine_matches_bloom_engine(spark, tmp_path, frontier_df,
-                                            images_df, robots_df, url_seen_df):
-    def run(kind, name):
-        eng = CrawlEngine(spark, str(tmp_path / name), images=images_df,
-                          robots=robots_df, top_k=4, salts=4,
-                          filter_kind=kind)
-        eng.bootstrap(frontier_df, url_seen_df)
-        eng.run(2)
-        return sorted(r["url_key"] for r in
-                      eng.fetched_t.read(spark).select("url_key").collect())
-
-    assert run("bloom", "b") == run("cuckoo", "c")
-
-
 def test_store_probe_engine_matches_exact_engine(spark, tmp_path,
                                                  frontier_df, images_df,
                                                  robots_df, url_seen_df):
     """The filter-store probe (per-bucket file loads after a bucket
-    repartition — the 10^10 path), for both filter kinds, must leave the
-    exact state of the plain anti-join engine (use_bloom=False) — here
-    across a crash between the url_seen commit (table AND exact segments)
-    and the epoch-closing frontier commit, resumed by a fresh engine."""
+    repartition — the 10^10 path) must leave the exact state of the plain
+    anti-join engine (use_bloom=False) — here across a crash between the
+    url_seen commit (table AND exact segments) and the epoch-closing
+    frontier commit, resumed by a fresh engine."""
     from scrapy_newsutils_spark.operators import dedup
 
     def mk(name, **kw):
@@ -79,27 +65,29 @@ def test_store_probe_engine_matches_exact_engine(spark, tmp_path,
     orphan = frontier_df.limit(6).select(
         "url_key", "host", F.lit(2).alias("first_seen_epoch"),
         (F.col("url_key") % 64).cast("int").alias("bucket"))
-    for kind in ("bloom", "cuckoo"):
-        eng = mk(kind, filter_kind=kind)
-        eng.bootstrap(frontier_df, url_seen_df)
-        eng.run(1)
-        eng.url_seen_t.append(orphan, meta={"epoch": 2})
-        dedup.store_apply_keys(spark, orphan.select("url_key"),
-                               eng._filter_store_dir(), seq=2)
-        resumed = mk(kind, filter_kind=kind)
-        resumed.run(1)
-        for attr in ("frontier_t", "url_seen_t", "fetched_t"):
-            assert keys(resumed, attr) == keys(ref, attr), (kind, attr)
+    eng = mk("store")
+    eng.bootstrap(frontier_df, url_seen_df)
+    eng.run(1)
+    eng.url_seen_t.append(orphan, meta={"epoch": 2})
+    dedup.store_apply_keys(spark, orphan.select("url_key"),
+                           eng._filter_store_dir(), seq=2)
+    resumed = mk("store")
+    resumed.run(1)
+    for attr in ("frontier_t", "url_seen_t", "fetched_t"):
+        assert keys(resumed, attr) == keys(ref, attr), attr
 
 
 def test_filter_probe_accepts_only_store(spark, tmp_path, images_df,
                                         robots_df):
-    """The filter store is the only approximate URL-seen probe."""
+    """The Bloom filter store is the only approximate URL-seen probe."""
     CrawlEngine(spark, str(tmp_path / "ok"), images=images_df,
-                robots=robots_df, filter_probe="store")
+                robots=robots_df, filter_probe="store", filter_kind="bloom")
     with pytest.raises(ValueError):
         CrawlEngine(spark, str(tmp_path / "bc"), images=images_df,
                     robots=robots_df, filter_probe="broadcast")
+    with pytest.raises(ValueError):
+        CrawlEngine(spark, str(tmp_path / "ck"), images=images_df,
+                    robots=robots_df, filter_kind="cuckoo")
 
 
 def test_camel_snake_roundtrip():

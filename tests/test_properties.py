@@ -67,13 +67,3 @@ def test_bloom_never_false_negative(keys):
     bf = dedup.PyBloom(len(arr))
     bf.add_many(arr)
     assert bool(bf.contains_many(arr).all())
-
-
-@given(st.lists(st.integers(min_value=-(2**62), max_value=2**62), min_size=1,
-                max_size=1000, unique=True))
-@settings(max_examples=20, deadline=None)
-def test_cuckoo_never_false_negative_when_inserts_succeed(keys):
-    arr = np.array(keys, dtype=np.int64)
-    cf = dedup.PyCuckoo(len(arr))
-    if cf.add_many(arr) == 0:
-        assert bool(cf.contains_many(arr).all())
