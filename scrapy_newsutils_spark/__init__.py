@@ -12,7 +12,7 @@ item-pipeline news crawler, reference at /root/reference) as idiomatic Spark:
 - The batch NLP layer: TF-IDF all-pairs similarity, sibling/related banding,
   metapost group-aggregation with deterministic version hashing.
 - Training-data-pipeline ops: exact/MinHash-LSH/SimHash/Jaccard/embedding
-  dedup, ANN similarity search, multimodal binary columns, text analysis.
+  dedup, ANN similarity search, text analysis.
 
 Everything is DataFrame/SQL-first; Python only appears as Arrow-vectorized
 pandas UDFs (never per-row Python in a hot path).

@@ -235,32 +235,3 @@ def _histogram_pop(frontier: DataFrame, k: int,
         surv.withColumn("pop_rank", F.row_number().over(w2))
         .where(F.col("pop_rank") <= k)
     )
-
-
-def remove_popped(frontier: DataFrame, popped: DataFrame) -> DataFrame:
-    """Frontier minus the popped rows (anti-join on url_key)."""
-    return frontier.join(popped.select("url_key"), "url_key", "left_anti")
-
-
-def opic_cash_update(frontier: DataFrame, popped_with_outlinks: DataFrame) -> DataFrame:
-    """OPIC-style priority refresh: each popped page distributes its 'cash'
-    (priority) equally over its outlinks; frontier rows that are targets
-    accumulate the contribution. Expressed as an agg + left join + coalesce
-    (no per-row Python).
-
-    popped_with_outlinks: (url_key, priority, outlink_key array<long>).
-    """
-    contrib = (
-        popped_with_outlinks.select(
-            F.explode("outlink_key").alias("url_key"),
-            (F.col("priority") / F.greatest(F.size("outlink_key"), F.lit(1))).alias("cash"),
-        )
-        .groupBy("url_key")
-        .agg(F.sum("cash").alias("cash"))
-    )
-    return (
-        frontier.join(contrib, "url_key", "left")
-        .withColumn("priority", F.least(F.col("priority") + F.coalesce("cash", F.lit(0.0)),
-                                        F.lit(1.0)))
-        .drop("cash")
-    )

@@ -384,11 +384,12 @@ def cosine_expr(a: F.Column, b: F.Column) -> F.Column:
     return dot / (_norm_expr(a) * _norm_expr(b))
 
 
-def _gram_pairs_fn(thr: float, same_cap: int = 1 << 25):
+def _gram_pairs_fn(thr: float, same_cap: int = 1 << 22):
     """applyInPandas kernel for one (block, chunk_i, chunk_j) pair-group:
     BLAS Gram product over the two chunks' vectors, emit (a, b, cos_raw)
     for cos ≥ ``thr``. Row-sliced so no slice materializes more than
-    ``same_cap`` Gram cells (bounded task memory at any chunk size)."""
+    ``same_cap`` Gram cells: 2^22 float64 cells = 32 MB per slice, so task
+    memory stays bounded at any chunk size and worker count."""
 
     def gram(pdf: pd.DataFrame) -> pd.DataFrame:
         ids = pdf["_id"].to_numpy()

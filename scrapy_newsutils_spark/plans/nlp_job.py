@@ -1,20 +1,30 @@
 """The reference's `scrapy nlp [similarity|summary|metapost]` day job as
-chained DataFrame plans (§3.2 — /root/reference/src/newsutils/nlp.py:76-100).
+one DataFrame plan per news day (§3.2 — reference nlp.py:76-100).
 
-DayNlp loads a day's posts, fits TF-IDF once, then per verb:
-save_similarity (J5/J6/W1 → siblings/related columns), save_summary
-(U2 models → summary/caption/category), save_metapost (J4/A2/A3 →
-metapost rows upserted matched on (version, type) — nlp.py:250-265).
+DayNlp loads a day's posts, fits TF-IDF once, then per verb saves its own
+fields: siblings/related (J5/J6/W1), summary/caption/category (U2) and the
+metapost rows (J4/A2/A3, upserted matched on (version, type) —
+nlp.py:250-265). ``save_day`` does the same from ONE partition-pruned day
+read, cached and counted once:
 
-Everything is one day-partition scan + joins; models never touch the
-driver (iterator pandas UDFs).
+- siblings/related come from the day-local numpy kernel
+  (``similarity.day_similarity_lists``, one groupBy(day).applyInPandas);
+  the DataFrame operators (``tfidf_vectors`` → … → ``similarity_lists``)
+  stay as its test reference and the oracle pairs' plan;
+- summary/caption/category are iterator pandas UDFs in the same projection;
+- metaposts are built from the in-memory siblings.
+
+It writes with at most two MERGEs: the selected verbs' columns of the
+day's posts, then the metapost upsert (skipped when no post has siblings).
+``save_similarity``/``save_summary``/``save_metapost`` are column
+selections of that plan. Models never touch the driver.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .. import conf, schemas
@@ -77,80 +87,27 @@ def day_posts(spark: SparkSession, posts_table: SnapshotTable,
     return pipeline.filter_metapost(_canon(posts, names))
 
 
-def save_similarity(spark: SparkSession, posts_table: SnapshotTable,
-                    day: dt.date,
-                    siblings_threshold: float = similarity.SIBLINGS_THRESHOLD,
-                    related_threshold: float = similarity.RELATED_THRESHOLD,
-                    top_n: int = similarity.MAX_DOCS,
-                    field_names: dict[str, str] | None = None) -> int:
-    """J5/J6/W1: similarity edges → reference banding (subtract-after-
-    top-n) → per-post sibling/related lists merged back into the day's
-    rows."""
-    names = conf.resolve_field_names(field_names)
-    posts = day_posts(spark, posts_table, day, field_names).cache()
-    vec = similarity.tfidf_vectors(posts, "post_id", similarity.get_post_text())
-    edges = similarity.mirror_pairs(
-        similarity.cosine_pairs(vec, min_score=related_threshold))
-    banded = similarity.banded_top_n(edges, siblings_threshold,
-                                     related_threshold, top_n)
-    lists = similarity.similarity_lists(banded)
-    updated = (
-        posts.drop("siblings", "related")
-        .join(lists, "post_id", "left")
-        .withColumn("siblings", F.coalesce(
-            "siblings", F.array().cast(schemas.POSTS["siblings"].dataType)))
-        .withColumn("related", F.coalesce(
-            "related", F.array().cast(schemas.POSTS["related"].dataType)))
-        .select([f.name for f in schemas.POSTS.fields])
-    )
-    updated = _uncanon(updated, names) \
-        .select([f.name for f in posts_table.schema.fields]).cache()
-    n = updated.count()
-    _merge_day(spark, posts_table, updated,
-               update_cols=[names.get("siblings", "siblings"),
-                            names.get("related", "related")])
-    posts.unpersist(); updated.unpersist()
-    return n
+# the NLP columns each verb owns (Day.save(only=[...]) — crawl/day.py:115-135)
+VERB_COLUMNS = {"similarity": ("siblings", "related"),
+                "summary": ("summary", "caption", "category"),
+                "metapost": ()}
 
 
-def save_summary(spark: SparkSession, posts_table: SnapshotTable,
-                 day: dt.date,
-                 field_names: dict[str, str] | None = None) -> int:
-    """U2: summary/caption/category columns written for the day's posts."""
-    names = conf.resolve_field_names(field_names)
-    posts = day_posts(spark, posts_table, day, field_names)
-    updated = summarize.save_summary(
-        posts, text_expr=similarity.get_post_text()
-    ).select([f.name for f in schemas.POSTS.fields])
-    updated = _uncanon(updated, names) \
-        .select([f.name for f in posts_table.schema.fields]).cache()
-    n = updated.count()
-    _merge_day(spark, posts_table, updated,
-               update_cols=[names.get("summary", "summary"),
-                            names.get("caption", "caption"),
-                            names.get("category", "category")])
-    updated.unpersist()
-    return n
-
-
-def save_metapost(spark: SparkSession, posts_table: SnapshotTable,
-                  day: dt.date, baseurl: str = "https://meta.example.com",
-                  start_time: dt.datetime | None = None,
-                  field_names: dict[str, str] | None = None) -> int:
-    """J4/A2/A3: metapost rows built from sibling clusters and upserted.
+def _metapost_rows(posts: DataFrame, baseurl: str,
+                   start_time: dt.datetime | None) -> DataFrame:
+    """J4/A2/A3: metapost rows built from sibling clusters, in the posts
+    schema (canonical names).
 
     Reference matches existing metaposts on (version=lookup_version, type)
     (nlp.py:250-265); the engine's version_hash is deterministic, so the
     upsert key is post_id = xxhash64(version_hash) — same idempotency:
     re-running over unchanged clusters rewrites identical rows."""
-    names = conf.resolve_field_names(field_names)
-    posts = day_posts(spark, posts_table, day, field_names)
     mp = metapost.build_metaposts(posts, baseurl=baseurl,
                                   start_time=start_time)
     summarized = mp.withColumn(
         "summary", summarize.summary_udf(F.col("member_text"))
     ).withColumn("caption", summarize.caption_udf(F.col("member_text")))
-    rows = summarized.select(
+    return summarized.select(
         "post_id",
         F.col("country"),
         F.col("link"),
@@ -172,23 +129,117 @@ def save_metapost(spark: SparkSession, posts_table: SnapshotTable,
         F.array().cast(schemas.POSTS["related"].dataType).alias("related"),
         F.current_timestamp().alias("created_ts"),
     ).select([f.name for f in schemas.POSTS.fields])
-    rows = _uncanon(rows, names) \
-        .select([f.name for f in posts_table.schema.fields]).cache()
-    n = rows.count()
-    _merge_day(spark, posts_table, rows)
-    rows.unpersist()
-    return n
+
+
+def _n_linked() -> F.Column:
+    """Posts with siblings: one metapost row each."""
+    return F.coalesce(F.sum((F.size("siblings") > 0).cast("long")),
+                      F.lit(0)).alias("n")
 
 
 def save_day(spark: SparkSession, posts_table: SnapshotTable, day: dt.date,
              verbs: tuple[str, ...] = ("similarity", "summary", "metapost"),
-             field_names: dict[str, str] | None = None) -> dict[str, int]:
-    """DayNlp.save_day: the three verbs chained (nlp.py:76-100).
-    ``field_names`` renames the computed NLP columns table-wide (PostMeta
-    analog — conf.build_posts_schema builds the matching table schema)."""
-    out = {}
-    for verb in verbs:
-        fn = {"similarity": save_similarity, "summary": save_summary,
-              "metapost": save_metapost}[verb]
-        out[verb] = fn(spark, posts_table, day, field_names=field_names)
+             field_names: dict[str, str] | None = None,
+             siblings_threshold: float = similarity.SIBLINGS_THRESHOLD,
+             related_threshold: float = similarity.RELATED_THRESHOLD,
+             top_n: int = similarity.MAX_DOCS,
+             baseurl: str = "https://meta.example.com",
+             start_time: dt.datetime | None = None) -> dict[str, int]:
+    """DayNlp.save_day (nlp.py:76-100) as one plan over one day read.
+
+    The day is read, cached and counted once. Siblings/related
+    (J5/J6/W1), summary/caption/category (U2) are one projection of it;
+    metaposts (J4/A2/A3) are built from the in-memory siblings (the stored
+    ones when ``similarity`` is not among ``verbs``). At most two MERGEs:
+    the selected verbs' NLP columns of the day's posts (``update_cols`` =
+    the union of their ``VERB_COLUMNS``, so a concurrent writer's other
+    columns survive), then the metapost upsert, skipped when no post has
+    siblings. Returns rows written per verb: the day count for
+    similarity/summary, the metapost rows (one per post with siblings) for
+    metapost. ``field_names`` renames the computed NLP columns table-wide
+    (PostMeta analog — conf.build_posts_schema builds the matching table
+    schema)."""
+    unknown = set(verbs) - set(VERB_COLUMNS)
+    if unknown:
+        raise KeyError(sorted(unknown)[0])
+    names = conf.resolve_field_names(field_names)
+    table_cols = [f.name for f in posts_table.schema.fields]
+    posts = day_posts(spark, posts_table, day, field_names).cache()
+    n_rows, n_linked = posts.agg(F.count(F.lit(1)), _n_linked()).first()
+    if n_rows == 0:  # nothing to write, and no action would fill an Observation
+        posts.unpersist()
+        return {v: 0 for v in verbs}
+
+    rows = posts
+    if "similarity" in verbs:
+        lists = similarity.day_similarity_lists(
+            posts, "post_id", similarity.get_post_text(),
+            F.to_date("publish_time"), siblings_threshold,
+            related_threshold, top_n)
+        refs = schemas.POSTS["siblings"].dataType
+        rows = (rows.drop("siblings", "related")
+                .join(lists, "post_id", "left")
+                .withColumn("siblings", F.coalesce("siblings", F.array().cast(refs)))
+                .withColumn("related", F.coalesce("related", F.array().cast(refs))))
+    if "summary" in verbs:
+        rows = summarize.save_summary(rows, text_expr=similarity.get_post_text())
+    rows = rows.select([f.name for f in schemas.POSTS.fields])
+
+    update_cols = [names.get(c, c) for v in verbs for c in VERB_COLUMNS[v]]
+    cached = []
+    if update_cols:
+        rows = rows.cache()
+        cached.append(rows)
+        linked = Observation()
+        _merge_day(spark, posts_table,
+                   _uncanon(rows.observe(linked, _n_linked()), names)
+                   .select(table_cols),
+                   update_cols=update_cols)
+        n_linked = linked.get["n"]
+    out = {v: n_rows for v in verbs}
+    if "metapost" in verbs:
+        out["metapost"] = n_linked
+        if n_linked:
+            meta = _uncanon(_metapost_rows(rows, baseurl, start_time), names) \
+                .select(table_cols).cache()
+            cached.append(meta)
+            _merge_day(spark, posts_table, meta)
+    for df in (posts, *cached):
+        df.unpersist()
     return out
+
+
+def save_similarity(spark: SparkSession, posts_table: SnapshotTable,
+                    day: dt.date,
+                    siblings_threshold: float = similarity.SIBLINGS_THRESHOLD,
+                    related_threshold: float = similarity.RELATED_THRESHOLD,
+                    top_n: int = similarity.MAX_DOCS,
+                    field_names: dict[str, str] | None = None) -> int:
+    """J5/J6/W1: similarity edges → reference banding (subtract-after-
+    top-n) → per-post sibling/related lists merged back into the day's
+    rows: ``save_day`` with the similarity columns only."""
+    return save_day(spark, posts_table, day, verbs=("similarity",),
+                    field_names=field_names,
+                    siblings_threshold=siblings_threshold,
+                    related_threshold=related_threshold,
+                    top_n=top_n)["similarity"]
+
+
+def save_summary(spark: SparkSession, posts_table: SnapshotTable,
+                 day: dt.date,
+                 field_names: dict[str, str] | None = None) -> int:
+    """U2: summary/caption/category columns written for the day's posts:
+    ``save_day`` with the summary columns only."""
+    return save_day(spark, posts_table, day, verbs=("summary",),
+                    field_names=field_names)["summary"]
+
+
+def save_metapost(spark: SparkSession, posts_table: SnapshotTable,
+                  day: dt.date, baseurl: str = "https://meta.example.com",
+                  start_time: dt.datetime | None = None,
+                  field_names: dict[str, str] | None = None) -> int:
+    """J4/A2/A3: metapost rows built from the stored sibling clusters and
+    upserted: ``save_day`` with the metapost rows only."""
+    return save_day(spark, posts_table, day, verbs=("metapost",),
+                    field_names=field_names, baseurl=baseurl,
+                    start_time=start_time)["metapost"]

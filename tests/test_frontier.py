@@ -55,32 +55,6 @@ def test_seed_urls_pop_first(frontier_df):
     assert low == 0
 
 
-def test_remove_popped(frontier_df):
-    popped = fr.pop_top_k_per_host(frontier_df, k=5, salts=8)
-    rest = fr.remove_popped(frontier_df, popped)
-    assert rest.count() == frontier_df.count() - popped.count()
-    assert rest.join(popped.select("url_key"), "url_key", "left_semi").count() == 0
-
-
-def test_opic_cash_update(spark, frontier_df):
-    """A popped page's cash splits equally over outlinks and caps at 1.0."""
-    targets = [r["url_key"] for r in frontier_df.limit(4).collect()]
-    popped = spark.createDataFrame(
-        [(999, 0.8, targets[:2]), (998, 0.4, targets[2:4])],
-        "url_key long, priority double, outlink_key array<long>",
-    )
-    updated = fr.opic_cash_update(frontier_df, popped)
-    before = {r["url_key"]: r["priority"] for r in frontier_df.collect()}
-    after = {r["url_key"]: r["priority"] for r in updated.collect()}
-    for t in targets[:2]:
-        assert abs(after[t] - min(before[t] + 0.4, 1.0)) < 1e-9
-    for t in targets[2:4]:
-        assert abs(after[t] - min(before[t] + 0.2, 1.0)) < 1e-9
-    untouched = set(before) - set(targets)
-    for u in list(untouched)[:10]:
-        assert after[u] == before[u]
-
-
 def test_pop_strategies_equal_wide(spark, frontier_df):
     """Every physical pop strategy (wide / narrow / histogram, plus the
     auto pick under big hints) must produce exactly the same rows+ranks —

@@ -4,6 +4,7 @@ nlp day job (§3.2) against the posts fixture corpus."""
 from __future__ import annotations
 
 import datetime as dt
+import hashlib
 
 import pytest
 from pyspark.sql import functions as F
@@ -172,3 +173,84 @@ def test_concurrent_column_survives_save_similarity(spark, posts_table, monkeypa
     row = posts_table.read(spark).where(F.col("post_id") == victim).collect()[0]
     assert row["tags"] == ["CONCURRENT"]      # concurrent write survived
     assert row["siblings"] is not None        # and the verb's column landed
+
+
+def test_save_day_reads_once_and_merges_at_most_twice(spark, posts_table,
+                                                      tmp_path, monkeypatch):
+    """One plan per day: one day read and at most two MERGEs (the posts'
+    NLP columns, then the metapost upsert); a day where no post has
+    siblings skips the metapost MERGE. Metaposts built from the in-memory
+    siblings are one per distinct sibling cluster, hashed from the stored
+    siblings, and equal the rows of the stored-siblings path
+    (``save_similarity`` then ``save_metapost``)."""
+    batch = fixtures.posts_batch(spark)
+    dates = pipeline.parse_dates("2024-03-01", "2024-03-05")
+    posts_pipeline.process_crawl_batch(spark, batch, posts_table, dates)
+    reads, merges = [], []
+    orig_read, orig_merge = nlp_job.day_posts, nlp_job._merge_day
+
+    def counting_read(*args, **kwargs):
+        reads.append(args[2])
+        return orig_read(*args, **kwargs)
+
+    def counting_merge(spark_, table, rows, update_cols=None):
+        merges.append(update_cols)
+        orig_merge(spark_, table, rows, update_cols=update_cols)
+
+    monkeypatch.setattr(nlp_job, "day_posts", counting_read)
+    monkeypatch.setattr(nlp_job, "_merge_day", counting_merge)
+    # the fixture day's posts are siblings only below the default 0.4
+    out = nlp_job.save_day(spark, posts_table, DAY0, siblings_threshold=0.25,
+                           related_threshold=0.1)
+    assert out["metapost"] > 0
+    assert reads == [DAY0]
+    assert merges == [["siblings", "related", "summary", "caption", "category"],
+                      None]
+
+    def day_rows(table):
+        return table.read(spark).where(
+            F.to_date("publish_time") == DAY0.isoformat())
+
+    plain = day_rows(posts_table).where(
+        ~F.col("type").startswith("metapost")).collect()
+    created = {r["post_id"]: r["created_ts"] for r in plain}
+    leaders = [r for r in plain if r["siblings"]]
+    assert out["metapost"] == len(leaders)   # one built row per leader
+    versions = set()                         # A3: md5 of the sorted member ids
+    for r in leaders:
+        members = {r["post_id"], *(s["post_id"] for s in r["siblings"])}
+        versions.add(hashlib.md5("".join(
+            str(m) for _, m in sorted((created[m], m) for m in members
+                                      if m in created)).encode()).hexdigest())
+    metas = day_rows(posts_table).where(F.col("type").startswith("metapost"))
+    assert sorted(r["link"].rsplit("/", 1)[1] for r in metas.collect()) \
+        == sorted(versions)
+
+    stored = SnapshotTable(str(tmp_path / "stored"), schemas.POSTS)
+    stored.overwrite(spark.createDataFrame([], schemas.POSTS))
+    posts_pipeline.process_crawl_batch(spark, batch, stored, dates)
+    nlp_job.save_similarity(spark, stored, DAY0, siblings_threshold=0.25,
+                            related_threshold=0.1)
+    assert nlp_job.save_metapost(spark, stored, DAY0) == out["metapost"]
+    cols = [c for c in metas.columns if c != "created_ts"]
+
+    def meta_rows(table):
+        return sorted(day_rows(table).where(F.col("type").startswith("metapost"))
+                      .select(cols).collect(), key=lambda r: r["post_id"])
+
+    assert meta_rows(posts_table) == meta_rows(stored)
+
+    # a day whose posts share no word: no siblings, so no metapost MERGE
+    day1 = DAY0 + dt.timedelta(days=1)
+    lone = posts_table.read(spark).where(
+        F.to_date("publish_time") == day1.isoformat()).select("post_id")
+    words = F.concat(F.lit("w"), F.col("post_id").cast("string"))
+    posts_table.merge_upsert_partitioned(
+        spark, posts_table.read(spark).join(lone, "post_id")
+        .withColumn("title", words).withColumn("text", words),
+        key_cols=["post_id"], part_expr=F.to_date("publish_time"),
+        update_cols=["title", "text"])
+    reads.clear(); merges.clear()
+    out = nlp_job.save_day(spark, posts_table, day1)
+    assert out["metapost"] == 0 and out["similarity"] == lone.count() > 0
+    assert reads == [day1] and len(merges) == 1

@@ -124,6 +124,102 @@ def test_similarity_lists_shape(spark, corpus):
     assert scores == sorted(scores, reverse=True)
 
 
+# -- day-local kernel vs the shuffle plan ----------------------------------------
+
+def _tied_day(spark):
+    """48 posts on 4 topics plus 8 exact duplicates (tied scores). Seeded so
+    that scores fall just above and just below 0.2 and 0.4 but none within
+    1e-9 of either, and most posts have more candidates than top_n."""
+    rng = np.random.default_rng(5)
+    topics = [[f"t{k}w{j}" for j in range(10)] for k in range(4)]
+    filler = [f"f{j}" for j in range(120)]
+    rows = []
+    for i in range(48):
+        words = list(rng.choice(topics[i % 4], size=int(rng.integers(3, 8)),
+                                replace=False)) \
+            + list(rng.choice(filler, size=int(rng.integers(4, 10))))
+        rows.append((1000 + i, f"Story {words[0]}", " ".join(words)))
+    rows += [(5000 + j, rows[j * 5][1], rows[j * 5][2]) for j in range(8)]
+    return spark.createDataFrame(rows, ["post_id", "title", "text"])
+
+
+def _assert_kernel_matches_shuffle_plan(docs, sib, rel, top_n=2):
+    """Kernel lists == shuffle-plan lists: same ids, bands and order, scores
+    within 1e-12. Where the plans pick different ids at one position, the
+    kernel's id must score within 1e-12 of the plan's for that source (a
+    tie, broken by last-bit summation order in Spark)."""
+    text = similarity.get_post_text()
+    vec = similarity.tfidf_vectors(docs, "post_id", text)
+    half = similarity.cosine_pairs(vec).collect()
+    true_score = {}
+    for r in half:
+        true_score[(r["a"], r["b"])] = true_score[(r["b"], r["a"])] = r["score"]
+    want = {r["post_id"]: r for r in similarity.similarity_lists(
+        similarity.banded_top_n(similarity.mirror_pairs(
+            similarity.cosine_pairs(vec, min_score=rel)), sib, rel, top_n)
+    ).collect()}
+    got = {r["post_id"]: r for r in similarity.day_similarity_lists(
+        docs, "post_id", text, F.lit(0), sib, rel, top_n).collect()}
+    assert set(got) == {r["post_id"] for r in docs.select("post_id").collect()}
+    assert set(want) <= set(got)
+    for pid, g in got.items():
+        for band in ("siblings", "related"):
+            w_refs = want[pid][band] if pid in want else []
+            g_refs = g[band]
+            assert len(w_refs) == len(g_refs), (pid, band, w_refs, g_refs)
+            for w, k in zip(w_refs, g_refs):
+                assert abs(w["score"] - k["score"]) <= 1e-12, (pid, band)
+                if w["post_id"] != k["post_id"]:
+                    assert abs(true_score[(pid, k["post_id"])] - w["score"]) \
+                        <= 1e-12, (pid, band, w_refs, g_refs)
+
+
+def test_kernel_matches_shuffle_plan_on_corpus(spark, corpus):
+    for sib, rel in [(0.4, 0.1), (similarity.SIBLINGS_THRESHOLD,
+                                  similarity.RELATED_THRESHOLD)]:
+        _assert_kernel_matches_shuffle_plan(corpus, sib, rel)
+
+
+def test_kernel_matches_shuffle_plan_on_posts_batch(spark):
+    docs = fixtures.posts_batch(spark).select("post_id", "title", "text").cache()
+    _assert_kernel_matches_shuffle_plan(docs, 0.4, 0.2)
+    docs.unpersist()
+
+
+def test_kernel_matches_shuffle_plan_on_tied_edge_day(spark):
+    docs = _tied_day(spark).cache()
+    text = similarity.get_post_text()
+    scores = np.array([r["score"] for r in similarity.cosine_pairs(
+        similarity.tfidf_vectors(docs, "post_id", text)).collect()])
+    for t in (0.2, 0.4):  # the edges are exercised, and none is ambiguous
+        assert ((scores > t - 0.01) & (scores < t)).any()
+        assert ((scores >= t) & (scores < t + 0.01)).any()
+        assert np.abs(scores - t).min() > 1e-9
+    _assert_kernel_matches_shuffle_plan(docs, 0.4, 0.2)
+    lists = similarity.day_similarity_lists(docs, "post_id", text, F.lit(0))
+    dup = {r["post_id"]: r for r in lists.collect()}[5000]  # copy of 1000
+    assert dup["siblings"][0]["post_id"] == 1000
+    assert dup["siblings"][0]["score"] == pytest.approx(1.0)
+    docs.unpersist()
+
+
+def test_kernel_empty_and_pruned_docs_get_empty_lists(spark):
+    """A post whose every term is pruned (df > N·max_df_ratio) or that has
+    no tokens gets empty lists, never NaN scores."""
+    docs = spark.createDataFrame(
+        [(i, "common words", "common words") for i in (1, 2, 3, 4)]
+        + [(5, "storm harbor", "storm harbor city"),
+           (6, "storm harbor", "storm harbor town"), (7, None, None)],
+        "post_id long, title string, text string")
+    got = {r["post_id"]: r for r in similarity.day_similarity_lists(
+        docs, "post_id", similarity.get_post_text(), F.lit(0)).collect()}
+    assert all(not got[i]["siblings"] and not got[i]["related"]
+               for i in (1, 2, 3, 4, 7))
+    assert [r["post_id"] for r in got[5]["siblings"]] == [6]
+    assert not math.isnan(got[5]["siblings"][0]["score"])
+    _assert_kernel_matches_shuffle_plan(docs, 0.4, 0.2)
+
+
 def test_expand_refs_drops_dangling(spark, posts_with_siblings=None):
     posts = spark.createDataFrame(
         [(1, [(2, 0.9), (999, 0.5)]), (2, [(1, 0.9)])],
