@@ -28,7 +28,15 @@ bucketed state table and runs membership as a two-phase filter:
   result equals the plain LEFT ANTI join ``exact_new_urls`` (tested in
   tests/test_dedup.py and, engine-wide, tests/test_invariants.py).
 
-Bloom cannot delete, so a recrawl-TTL expiry discards the store and the
+A store's ``filter_meta.json``, written only through
+``FilterStore.write_meta``, is the one record of its layout, per-bucket
+counters and design capacities, kind and source stamp; the driver keeps no
+copy. ``TableFilter`` is the one lifecycle of a store kept in step with a
+table: reload when the stamp matches the table, build, extend, stamp,
+invalidate and drop a crashed epoch's orphan segments. The crawl engine
+holds two: url_seen and frontier membership.
+
+Bloom cannot delete, so a recrawl-TTL expiry invalidates the store and the
 owner rebuilds it from the shrunk table (``CrawlEngine.expire_seen``): one
 O(table) build per expiry. Measured against a segments-only probe, the
 filter pays for itself at every bucket size tried (0.1M-25M keys).
@@ -40,6 +48,7 @@ import json
 import math
 import os
 import uuid
+from collections.abc import Callable
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -103,42 +112,26 @@ NEW_BUCKET_ITEMS = 65_536
 FILTER_KIND = "bloom"
 
 
-class PartitionedFilter:
-    """Driver-side metadata of a FilterStore partitioned by
-    ``bucket = key mod P``: the layout plus per-bucket insert counters.
-
-    Each bucket's PyBloom lives only in the store (built and
-    mutated executor-side) and covers only its own keys, so no single
-    bitmap ever exceeds ``cap_per_bucket`` — the bucket count scales with
-    the seen set instead of the fpp silently degrading past a fixed cap.
-    The driver keeps counters to decide when a rebuild is due."""
-
-    def __init__(self, buckets: int):
-        self.buckets = int(buckets)
-        self.inserted: dict[int, int] = {}
-        self.capacity: dict[int, int] = {}  # per-bucket design n_items
-        self.build_rss_mb = 0.0  # max builder-task peak RSS (evidence)
-
-    def overfilled(self) -> bool:
-        """Any bucket past its own design capacity (fpp degraded) → the
-        owner should rebuild from the state table with more buckets."""
-        return any(n > self.capacity.get(bv, NEW_BUCKET_ITEMS)
-                   for bv, n in self.inserted.items())
+def overfilled(meta: dict) -> bool:
+    """Any bucket of a store's meta past its own design capacity (fpp
+    degraded): the owner rebuilds from the table with more buckets."""
+    cap = meta.get("capacity", {})
+    return any(n > cap.get(bv, NEW_BUCKET_ITEMS)
+               for bv, n in meta.get("inserted", {}).items())
 
 
 def pick_buckets(expected: int, cap_per_bucket: int = 25_000_000) -> int:
     """Bucket count so no per-bucket filter exceeds cap_per_bucket keys
     (with 2x headroom for incremental epoch inserts)."""
-    import math as _m
-
-    return max(1, int(_m.ceil(2 * max(expected, 1) / cap_per_bucket)))
+    return max(1, int(math.ceil(2 * max(expected, 1) / cap_per_bucket)))
 
 
 def build_partitioned(seen: DataFrame, store_path: str, key: str = "url_key",
                       expected: int | None = None,
                       buckets: int | None = None,
                       cap_per_bucket: int = 25_000_000,
-                      fpp: float = 0.01) -> PartitionedFilter | None:
+                      fpp: float = 0.01,
+                      source_version: int | None = None) -> dict | None:
     """Distributed build of a FilterStore at ``store_path``: repartition the
     seen keys by ``pmod(key, P)`` (one narrow ~16 B/row shuffle, UNCAPPED —
     one partition per bucket so per-task memory is bounded by
@@ -153,9 +146,10 @@ def build_partitioned(seen: DataFrame, store_path: str, key: str = "url_key",
     Each task writes its buckets' ``.npz`` filter files and exact key
     segments straight into the store and ships only a tiny manifest row —
     the driver never holds filter bytes (800 buckets x 32 MB would be
-    ~25 GB of driver heap at 10^10 keys) and gets back a metadata-only
-    PartitionedFilter (probe via ``tag_by_filter_store``). Each manifest
-    row carries the build task's peak RSS (``rss_mb``) so tests can
+    ~25 GB of driver heap at 10^10 keys). The driver folds the manifest
+    into the store's meta and returns it: layout, per-bucket insert counts
+    and design capacities, kind, ``source_version`` when given, and
+    ``build_rss_mb``, the largest build task's peak RSS, so tests can
     assert the fixed per-task memory budget directly.
     """
     if expected is None:
@@ -224,14 +218,22 @@ def build_partitioned(seen: DataFrame, store_path: str, key: str = "url_key",
                                   pa.field("rss_mb", pa.float64())]))
 
     rows = keyed.mapInArrow(part_build, out_schema).collect()
-    pf = PartitionedFilter(P)
-    for r in rows:
-        bv, n = int(r["bv"]), int(r["n"])
-        pf.inserted[bv] = n
-        pf.capacity[bv] = max(2 * n, exp_per_bucket)
-    pf.build_rss_mb = max((float(r["rss_mb"]) for r in rows), default=0.0)
-    FilterStore(s_path).save_meta(pf)
-    return pf
+    meta = {"buckets": P, "kind": FILTER_KIND,
+            "inserted": {str(r["bv"]): int(r["n"]) for r in rows},
+            "capacity": {str(r["bv"]): max(2 * int(r["n"]), exp_per_bucket)
+                         for r in rows},
+            "build_rss_mb": max((float(r["rss_mb"]) for r in rows),
+                                default=0.0)}
+    FilterStore(s_path).write_meta(_stamped(meta, source_version))
+    return meta
+
+
+def _stamped(meta: dict, version: int | None) -> dict:
+    """``meta`` with its source stamp set to ``version`` (None: removed)."""
+    meta.pop("source_version", None)
+    if version is not None:
+        meta["source_version"] = int(version)
+    return meta
 
 
 def merge_sorted_unique(segs: list, chunk: int = 4_000_000) -> np.ndarray:
@@ -392,15 +394,6 @@ class FilterStore:
                     or name == "filter_meta.json":
                 os.remove(os.path.join(self.path, name))
 
-    def save_meta(self, pf: PartitionedFilter,
-                  source_version: int | None = None) -> None:
-        meta = {"buckets": pf.buckets, "kind": FILTER_KIND,
-                "inserted": {str(b): n for b, n in pf.inserted.items()},
-                "capacity": {str(b): n for b, n in pf.capacity.items()}}
-        if source_version is not None:
-            meta["source_version"] = int(source_version)
-        self.write_meta(meta)
-
     def write_meta(self, meta: dict) -> None:
         """The one writer of ``filter_meta.json``: tmp file + os.replace,
         so a concurrent reader or a restart after a crash sees the old or
@@ -414,36 +407,13 @@ class FilterStore:
         with open(self._meta_path()) as fh:
             return json.load(fh)
 
-    # -- clean-resume reload (VERDICT r5 #2) ----------------------------------
     def stamp_source(self, version: int | None) -> None:
         """Record (or clear, with None) the source-table version this
         store's contents reflect. A resumed engine reloads the store when
         the stamp equals the table's current version instead of paying the
         O(table) clear+rebuild scan every process start."""
-        if not os.path.exists(self._meta_path()):
-            return
-        m = self.meta()
-        if version is None:
-            m.pop("source_version", None)
-        else:
-            m["source_version"] = int(version)
-        self.write_meta(m)
-
-    def source_version(self) -> int | None:
-        if not os.path.exists(self._meta_path()):
-            return None
-        v = self.meta().get("source_version")
-        return None if v is None else int(v)
-
-    def load_meta_only(self) -> PartitionedFilter:
-        """PartitionedFilter over this store's persisted buckets (the shape
-        build_partitioned returns): probes go through the bucket files, the
-        driver holds only counters. Used by the clean-resume reload path."""
-        m = self.meta()
-        pf = PartitionedFilter(m["buckets"])
-        pf.inserted = {int(b): int(n) for b, n in m.get("inserted", {}).items()}
-        pf.capacity = {int(b): int(n) for b, n in m.get("capacity", {}).items()}
-        return pf
+        if os.path.exists(self._meta_path()):
+            self.write_meta(_stamped(self.meta(), version))
 
     @staticmethod
     def load_bucket(path: str, bv: int) -> PyBloom | None:
@@ -544,7 +514,8 @@ def split_by_filter_store(spark: SparkSession, batch: DataFrame,
 
 def store_apply_keys(spark: SparkSession, keys_df: DataFrame,
                      store_path: str, key: str = "url_key",
-                     seq: int | None = None) -> dict[int, int]:
+                     seq: int | None = None,
+                     source_version: int | None = None) -> dict[int, int]:
     """Apply incremental inserts to a FilterStore ENTIRELY executor-side:
     the batch is repartitioned on ``pmod(key, P)`` so each task owns whole
     buckets, loads each bucket's file once, mutates it with numpy, and
@@ -552,8 +523,11 @@ def store_apply_keys(spark: SparkSession, keys_df: DataFrame,
     never a key (the round-2 epoch loop pulled every epoch's new keys
     through ``toPandas`` and re-saved buckets driver-side).
 
-    Returns ``{bucket: n_inserted}``. Bucket counts are folded into the
-    store's meta file so ``overfilled`` stays observable across epochs.
+    Returns ``{bucket: n_inserted}``. One meta write folds the bucket
+    counts into the store's meta, so ``overfilled`` stays observable across
+    epochs, and sets its source stamp to ``source_version``: None clears
+    it, since the inserted keys move the store past any table version it
+    was stamped with.
     """
     store = FilterStore(store_path)
     meta = store.meta()
@@ -607,12 +581,107 @@ def store_apply_keys(spark: SparkSession, keys_df: DataFrame,
     rows = routed.mapInArrow(gen, out_schema).collect()
     per_bucket = {int(r["bv"]): int(r["n"]) for r in rows}
     # fold counters into the meta file (tiny JSON — no keys)
-    ins = {int(b): n for b, n in meta.get("inserted", {}).items()}
+    ins = meta.setdefault("inserted", {})
     for bv, n in per_bucket.items():
-        ins[bv] = ins.get(bv, 0) + n
-    meta["inserted"] = {str(b): n for b, n in ins.items()}
-    store.write_meta(meta)
+        ins[str(bv)] = ins.get(str(bv), 0) + n
+    store.write_meta(_stamped(meta, source_version))
     return per_bucket
+
+
+class TableFilter:
+    """The lifecycle of a FilterStore kept in step with one table's
+    ``url_key`` set: the one implementation behind the crawl engine's
+    url_seen filter and its frontier-membership sidecar.
+
+    ``ensure`` returns the store's path, ready to probe: the store this
+    process keeps current; else, on a resume, the persisted store when its
+    meta is stamped with the table's current version and this filter kind;
+    else a rebuild from the table, sized for ``expected(keys)`` keys with
+    every bucket capped at ``cap_per_bucket``. A store with a bucket past
+    its design capacity is rebuilt the same way, with more buckets.
+    ``extend`` inserts a batch executor-side, ``stamp``/``unstamp`` set and
+    clear the table version the store reflects, ``invalidate`` forces the
+    next ``ensure`` to rebuild, and ``drop_orphans`` removes a crashed
+    epoch's key segments.
+
+    ``filter_meta.json`` is the only record of the store's layout,
+    counters, kind and stamp; this object holds no counters.
+    ``stamp_writes=True`` stamps every build and extend with the table's
+    current version, for an owner that appends to the table before it
+    extends the store; False leaves the stamp to the owner."""
+
+    def __init__(self, spark: SparkSession, path: str, table,
+                 expected: Callable[[DataFrame], int], cap_per_bucket: int,
+                 stamp_writes: bool):
+        self.spark, self.path, self.table = spark, path, table
+        self.expected = expected
+        self.cap_per_bucket = cap_per_bucket
+        self.stamp_writes = stamp_writes
+        # set once this process built or reloaded the store: every later
+        # mutation goes through this object, so the store stays current
+        self.live = False
+
+    def _write_stamp(self) -> int | None:
+        return self.table.current_version() if self.stamp_writes else None
+
+    def _reusable(self) -> bool:
+        try:
+            meta = FilterStore(self.path).meta()
+        except (OSError, ValueError):
+            return False  # missing or torn meta: rebuild
+        self.live = self.live or (
+            meta.get("source_version") == self.table.current_version()
+            and meta.get("kind") == FILTER_KIND)
+        return self.live and not overfilled(meta)
+
+    def ensure(self, keys: DataFrame | None = None) -> str:
+        """The store's path, reloaded or rebuilt first when it is not
+        current. A build reads ``keys``, the table's frame when the caller
+        already holds one, else the table."""
+        if not self._reusable():
+            if keys is None:
+                keys = self.table.read(self.spark)
+            expected = max(self.expected(keys), 1024)
+            # stale buckets of an old layout must not probe
+            FilterStore(self.path).clear()
+            # expected >= 1024, so the build never returns None: an empty
+            # table yields a store whose probe reads every key as new
+            build_partitioned(keys, self.path, expected=expected,
+                              cap_per_bucket=self.cap_per_bucket,
+                              source_version=self._write_stamp())
+            self.live = True
+        return self.path
+
+    def extend(self, keys: DataFrame, epoch: int) -> None:
+        """Insert a batch of new keys executor-side; their exact segments
+        carry ``epoch`` so ``drop_orphans`` can undo a crashed epoch."""
+        store_apply_keys(self.spark, keys.select("url_key"), self.path,
+                         seq=epoch, source_version=self._write_stamp())
+
+    def stamp(self, version: int) -> None:
+        """Record the table version the store reflects."""
+        FilterStore(self.path).stamp_source(version)
+
+    def unstamp(self) -> None:
+        """Clear the stamp before mutations that leave the store between
+        two table versions, so a crash in between forces a rebuild. A store
+        stamped with the table's current version is taken live first: the
+        clear never costs a clean resume its reload."""
+        self._reusable()
+        FilterStore(self.path).stamp_source(None)
+
+    def invalidate(self) -> None:
+        """Forget the store (Bloom cannot delete keys): the next ``ensure``
+        rebuilds it, in this process and after a resume."""
+        self.live = False
+        FilterStore(self.path).stamp_source(None)
+
+    def drop_orphans(self, epoch: int) -> None:
+        """Crash recovery: drop the key segments stamped ``epoch`` or later.
+        The filter files keep the orphan keys: false positives the segments
+        reject, never false negatives, so no rebuild is needed."""
+        if os.path.isdir(self.path):
+            FilterStore(self.path).drop_segments_from(epoch)
 
 
 def seen_updates(new_rows: DataFrame, epoch: int, buckets: int = 64) -> DataFrame:

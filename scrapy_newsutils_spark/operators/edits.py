@@ -101,8 +101,9 @@ def route_edits(classified: DataFrame, key: str = "short_link") -> DataFrame:
       still idempotent (classified pristine against the latest version);
     - minor: adopts existing post_id + version (update-in-place).
 
-    The result upserts with ``merge_upsert(key_cols=["post_id"])`` — minor
-    rows collide with (replace) the existing row, new/new_version insert.
+    The result upserts with ``merge_upsert_partitioned(key_cols=["post_id"])``
+    — minor rows collide with (replace) the existing row, new/new_version
+    insert.
     """
     kept = classified.where(F.col("edit_status") != "pristine")
     return (

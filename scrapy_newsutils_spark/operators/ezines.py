@@ -10,7 +10,8 @@ Reference semantics (/root/reference/src/newsutils/ezines/thesportsdb.py):
 
 Engine: the compound key becomes xxhash64(concat_ws(...)); the nested loop
 becomes a crossJoin of two tiny dims feeding the politeness-scheduled fetch
-stage; the sink is merge_upsert on event_pk partitioned by strSport.
+stage; the sink is merge_upsert_partitioned on event_pk, partitioned by
+strSport.
 """
 
 from __future__ import annotations

@@ -136,13 +136,20 @@ class CrawlEngine:
         self.fetched_t = SnapshotTable(os.path.join(self.root, "fetched"), schemas.FETCHED)
         self.metrics_t = SnapshotTable(os.path.join(self.root, "metrics"), schemas.METRICS)
         self.cash_t = SnapshotTable(os.path.join(self.root, "opic_cash"), schemas.OPIC_CASH)
-        # URL-seen filter sidecar: a FilterStore built lazily from url_seen
-        # (executor-side per-bucket builds), extended incrementally per
-        # epoch; the driver keeps only its PartitionedFilter counters. A
-        # fresh engine — i.e. a resumed job — reloads or rebuilds it; an
-        # overfilled filter is discarded and rebuilt with more buckets
-        # (never silently degraded).
-        self._filter: dedup.PartitionedFilter | None = None
+        # URL-seen filter: a FilterStore built lazily from url_seen
+        # (executor-side per-bucket builds), extended and stamped per epoch.
+        # A fresh engine (a resumed job) reloads it when its stamp matches
+        # url_seen, else rebuilds it; an overfilled store is rebuilt with
+        # more buckets (never silently degraded).
+        def seen_expected(seen: DataFrame) -> int:
+            n = seen.count()
+            # headroom for ~8 epochs of inserts without a rebuild
+            return max(n * 2, n + 8 * self.top_k * 210)
+
+        self.url_seen_filter = dedup.TableFilter(
+            self.spark, os.path.join(self.root, "url_seen_filters"),
+            self.url_seen_t, seen_expected, self.filter_cap_per_bucket,
+            stamp_writes=True)
         # frontier-MEMBERSHIP filter sidecar: discovery dedup
         # probes this instead of anti-joining outlinks against the FULL
         # frontier key set — the round-4 loop's one remaining O(frontier)
@@ -155,8 +162,17 @@ class CrawlEngine:
         # compaction's left join in both paths (expire_seen also purges its
         # queued cash — ADVICE r5). The one divergence — TTL expiry
         # re-opening a key — invalidates both sidecars, which rebuild from
-        # the (shrunk) tables at their next probe.
-        self._frontier_filter: dedup.PartitionedFilter | None = None
+        # the (shrunk) tables at their next probe. run_epoch stamps it at
+        # the epoch close only: discovery's append and the epoch-closing
+        # delete straddle its extend.
+        def frontier_expected(frontier: DataFrame) -> int:
+            n = self._frontier_rows_est
+            return 2 * (frontier.count() if n is None else n)
+
+        self.frontier_filter = dedup.TableFilter(
+            self.spark, os.path.join(self.root, "frontier_filters"),
+            self.frontier_t, frontier_expected, self.filter_cap_per_bucket,
+            stamp_writes=False)
         # approximate |hosts|, computed once per engine: gates the frontier
         # pop's narrow-vs-wide plan without a per-epoch distinct scan
         self._n_hosts_hint: int | None = None
@@ -231,141 +247,9 @@ class CrawlEngine:
             self._rollback_to_before_epoch(t, epoch)
         # the filter stores' exact key segments are epoch-stamped: drop the
         # crashed epoch's orphans so exact probes agree with the rolled-back
-        # url_seen/frontier tables. The approximate filter files mutate in
-        # place and keep the orphan keys — false positives the segments
-        # reject, never false negatives, so no filter rebuild is needed.
-        for d in (self._filter_store_dir(), self._frontier_filter_dir()):
-            if os.path.isdir(d):
-                dedup.FilterStore(d).drop_segments_from(epoch)
-
-    # -- URL-seen filter sidecar ----------------------------------------------
-    def _filter_store_dir(self) -> str:
-        return os.path.join(self.root, "url_seen_filters")
-
-    def _get_bloom(self) -> dedup.PartitionedFilter:
-        """Build once from url_seen (distributed per-bucket builds written
-        straight into the store: no key and no filter byte ever reaches the
-        driver), then extend incrementally per epoch.
-        Rebuilt — with a bucket count scaled to the current seen size — when
-        any bucket outgrows its design capacity: capacity grows by adding
-        buckets, never by letting fpp degrade (the round-1 50M hard cap and
-        its silent degradation are gone). Reads the url_seen TABLE only on
-        (re)build — steady-state epochs never scan it (VERDICT r3 #7)."""
-        if self._filter is not None and not self._filter.overfilled():
-            return self._filter
-        if self._filter is None:
-            # clean-resume reload (VERDICT r5 #2): the on-disk store is
-            # durable and epoch-stamped; when its source stamp still equals
-            # the url_seen table's current version, its buckets + exact
-            # segments are exactly the table's key set — reload the
-            # metadata instead of the O(table) clear+rebuild scan every
-            # process start (21 s at 60M keys; hours at 10^10). Any
-            # mismatch — crashed epoch rolled back, expiry, different
-            # filter kind — falls through to the rebuild.
-            pf = self._reload_store(self._filter_store_dir(),
-                                    self.url_seen_t.current_version())
-            if pf is not None and not pf.overfilled():
-                self._filter = pf
-                return self._filter
-        seen = self.url_seen_t.read(self.spark)
-        n_seen = seen.count()
-        # headroom for ~8 epochs of inserts without a rebuild
-        expected = max(n_seen * 2, n_seen + 8 * self.top_k * 210, 1024)
-        store = dedup.FilterStore(self._filter_store_dir())
-        store.clear()  # stale buckets of an old layout must not probe
-        # expected >= 1024, so build_partitioned never returns None: an
-        # EMPTY url_seen yields a store whose probe reads every key as new
-        self._filter = dedup.build_partitioned(
-            seen, self._filter_store_dir(), expected=expected,
-            cap_per_bucket=self.filter_cap_per_bucket)
-        store.stamp_source(self.url_seen_t.current_version())
-        return self._filter
-
-    def _bloom_add_df(self, keys_df: DataFrame, epoch: int = 0) -> None:
-        """Extend the URL-seen filter with an epoch's new keys,
-        executor-side: each task merges its own buckets' files
-        (dedup.store_apply_keys); the driver folds back only per-bucket
-        counters, zero key materialization."""
-        if self._filter is None:
-            return
-        added = dedup.store_apply_keys(
-            self.spark, keys_df.select("url_key"),
-            self._filter_store_dir(), seq=epoch)
-        for bv, n in added.items():
-            self._filter.inserted[bv] = \
-                self._filter.inserted.get(bv, 0) + n
-        # persist counters + the source stamp: a clean resume reloads
-        # this exact state instead of rebuilding (VERDICT r5 #2)
-        dedup.FilterStore(self._filter_store_dir()).save_meta(
-            self._filter, source_version=self.url_seen_t.current_version())
-
-    def _reload_store(self, store_dir: str,
-                      table_version: int) -> dedup.PartitionedFilter | None:
-        """Reload a persisted filter store when its source stamp matches the
-        table's current version and it was written with this filter kind
-        (an older build may have left a cuckoo store); None = must rebuild.
-        The stamp is written after every build/extend and cleared on
-        invalidation, so a matching stamp certifies the bucket files +
-        exact segments reflect exactly the stamped table state."""
-        store = dedup.FilterStore(store_dir)
-        try:
-            if store.source_version() != int(table_version):
-                return None
-            if store.meta().get("kind") != dedup.FILTER_KIND:
-                return None
-            return store.load_meta_only()
-        except Exception:
-            return None  # torn/missing meta: rebuild
-
-    # -- frontier-membership filter sidecar ------------------------------------
-    def _frontier_filter_dir(self) -> str:
-        return os.path.join(self.root, "frontier_filters")
-
-    def _get_frontier_filter(self, frontier: DataFrame) -> dedup.PartitionedFilter:
-        """Build once from the epoch-start frontier (distributed per-bucket
-        builds + exact key segments; the driver never sees a key), then
-        extend incrementally on each discovery append. Rebuilt from the
-        table on resume, on overfill, and after recrawl-TTL expiry — the
-        same lifecycle the url_seen sidecar has."""
-        if self._frontier_filter is not None and \
-                not self._frontier_filter.overfilled():
-            return self._frontier_filter
-        if self._frontier_filter is None:
-            # clean-resume reload (VERDICT r5 #2): run_epoch stamps the
-            # sidecar with the frontier version it closed at; a matching
-            # stamp means every live frontier key is in the filter and
-            # every filter key is live-or-seen — the sidecar's exactness
-            # invariant — so no rebuild scan is needed.
-            pf = self._reload_store(self._frontier_filter_dir(),
-                                    self.frontier_t.current_version())
-            if pf is not None and not pf.overfilled():
-                self._frontier_filter = pf
-                return self._frontier_filter
-        expected = self._frontier_rows_est
-        if expected is None:
-            expected = frontier.count()
-        expected = max(int(expected) * 2, 1024)
-        store = dedup.FilterStore(self._frontier_filter_dir())
-        store.clear()  # stale buckets of an old layout must not probe
-        self._frontier_filter = dedup.build_partitioned(
-            frontier, self._frontier_filter_dir(), expected=expected,
-            cap_per_bucket=self.filter_cap_per_bucket)
-        # expected >= 1024 above, so build_partitioned never returns None:
-        # an EMPTY frontier yields a zero-bucket store whose probe reads
-        # every key as definitely-new — the correct degenerate answer.
-        return self._frontier_filter
-
-    def _frontier_filter_add(self, keys_df: DataFrame, epoch: int) -> None:
-        """Extend the sidecar with an epoch's discovery additions
-        (executor-side bucket-file merges; driver folds back counters)."""
-        if self._frontier_filter is None:
-            return
-        added = dedup.store_apply_keys(
-            self.spark, keys_df.select("url_key"),
-            self._frontier_filter_dir(), seq=epoch)
-        for bv, n in added.items():
-            self._frontier_filter.inserted[bv] = \
-                self._frontier_filter.inserted.get(bv, 0) + n
+        # url_seen/frontier tables
+        for f in (self.url_seen_filter, self.frontier_filter):
+            f.drop_orphans(epoch)
 
     # -- link discovery (S2) --------------------------------------------------
     def _discovery_on(self) -> bool:
@@ -477,7 +361,6 @@ class CrawlEngine:
         dup_keys = None  # filter path: exact duplicate keys, no anti-join
         obs_pop = None  # filter path: popped/dup counts ride the plan
         if self.use_bloom:
-            self._get_bloom()
             # popped + dedup-dropped counters OBSERVE the tagged frame (one
             # CollectMetrics node below the cache) instead of a dedicated
             # popped.count() job in the metrics thread — one fewer driver
@@ -486,7 +369,7 @@ class CrawlEngine:
             # and the fetched append's full cache fill completes it).
             obs_pop = Observation()
             tagged = dedup.tag_by_filter_store(
-                spark, popped, self._filter_store_dir(), exact=True
+                spark, popped, self.url_seen_filter.ensure(), exact=True
             ).observe(
                 obs_pop,
                 F.count(F.lit(1)).alias("n_popped"),
@@ -562,7 +445,7 @@ class CrawlEngine:
         def _commit_url_seen() -> None:
             self.url_seen_t.append(seen_upd, meta={"epoch": epoch})
             if self.use_bloom:
-                self._bloom_add_df(seen_upd, epoch=epoch)
+                self.url_seen_filter.extend(seen_upd, epoch)
 
         def _commit_metrics() -> None:
             # n_popped: the filter path reads the observation that rode the
@@ -619,9 +502,8 @@ class CrawlEngine:
                 # loop's last O(frontier)-per-epoch term — VERDICT r4 #1).
                 # One cached probe feeds both branches: not-in-frontier
                 # (candidates) and in-frontier (lazy OPIC cash).
-                self._get_frontier_filter(frontier)
                 tagged_out = dedup.tag_by_filter_store(
-                    spark, out, self._frontier_filter_dir(),
+                    spark, out, self.frontier_filter.ensure(frontier),
                     exact=True).cache()
                 disco_cache = tagged_out
                 cand = tagged_out.where(~F.col("_maybe")).drop("_maybe")
@@ -633,7 +515,7 @@ class CrawlEngine:
                 # so the frontier probe above already dropped them; the
                 # racy segment read is therefore deterministic).
                 cand, _ = dedup.split_by_filter_store(
-                    spark, cand, self._filter_store_dir(), exact=True)
+                    spark, cand, self.url_seen_filter.path, exact=True)
             else:
                 # exact path: ONE left join against the frontier key set,
                 # cached, feeds both branches — the r5 anti-join +
@@ -690,7 +572,7 @@ class CrawlEngine:
                 # Applied AFTER the table append, mirroring url_seen: a
                 # crash in between leaves the filter behind the table — the
                 # rollback discards the append and the replay re-adds both.
-                self._frontier_filter_add(additions.select("url_key"), epoch)
+                self.frontier_filter.extend(additions, epoch)
             queued_cash = (
                 in_frontier
                 .groupBy("url_key").agg(F.sum("cash").alias("cash"))
@@ -726,22 +608,13 @@ class CrawlEngine:
         if self._discovery_on():
             tasks["discovery"] = _commit_discovery
             if self.use_bloom:
-                if self._frontier_filter is None:
-                    # clean-resume reload (VERDICT r5 #2) — must happen
-                    # BEFORE this epoch's stamp-clear below: a cleanly
-                    # closed store carries the stamp of the frontier
-                    # version this epoch starts from.
-                    pf = self._reload_store(self._frontier_filter_dir(),
-                                            frontier_v)
-                    if pf is not None and not pf.overfilled():
-                        self._frontier_filter = pf
                 # the epoch's discovery adds make the sidecar transiently
                 # inconsistent with every committed frontier version —
-                # clear the resume stamp now and restore it at the epoch
-                # close, so a crash in between forces the rebuild path
-                # instead of reloading a half-mutated store (VERDICT r5 #2
-                # safety).
-                dedup.FilterStore(self._frontier_filter_dir()).stamp_source(None)
+                # clear the resume stamp now (a cleanly closed store is
+                # reloaded first) and restore it at the epoch close, so a
+                # crash in between forces the rebuild path instead of
+                # reloading a half-mutated store (VERDICT r5 #2 safety).
+                self.frontier_filter.unstamp()
         expected_fv = frontier_v
         delete_dir = None
         try:
@@ -783,13 +656,11 @@ class CrawlEngine:
         if self.frontier_t.n_delete_deltas() >= self.compact_every:
             fv = self._compact_frontier(epoch)
 
-        if self._frontier_filter is not None:
+        if self.frontier_filter.live:
             # stamp the sidecar with the frontier version this epoch closed
             # at: a clean resume reloads it instead of rebuilding from a
-            # full frontier scan (VERDICT r5 #2). Counters ride along so
-            # overfill checks survive resume.
-            dedup.FilterStore(self._frontier_filter_dir()).save_meta(
-                self._frontier_filter, source_version=fv)
+            # full frontier scan (VERDICT r5 #2)
+            self.frontier_filter.stamp(fv)
 
         for df in (epoch_cache, polite, fetched):
             df.unpersist()
@@ -876,12 +747,9 @@ class CrawlEngine:
         # frontier sidecar's stale 'present' keys are only safe while
         # url_seen holds them, and expiry re-opens those keys — without a
         # rebuild the expired URLs could never be re-discovered.
-        self._filter = None
-        self._frontier_filter = None
         if self.use_bloom:
-            # stale stores must not be reloaded on a later resume
-            for d in (self._filter_store_dir(), self._frontier_filter_dir()):
-                dedup.FilterStore(d).stamp_source(None)
+            for f in (self.url_seen_filter, self.frontier_filter):
+                f.invalidate()
         return n
 
     def run(self, epochs: int) -> list[EpochResult]:

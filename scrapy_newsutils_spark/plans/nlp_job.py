@@ -24,7 +24,7 @@ from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import conf, schemas
@@ -101,9 +101,18 @@ def _metapost_rows(posts: DataFrame, baseurl: str,
     Reference matches existing metaposts on (version=lookup_version, type)
     (nlp.py:250-265); the engine's version_hash is deterministic, so the
     upsert key is post_id = xxhash64(version_hash) — same idempotency:
-    re-running over unchanged clusters rewrites identical rows."""
+    re-running over unchanged clusters rewrites identical rows.
+
+    Mutual siblings build one row per leader with the same post_id, and
+    the rows differ in the fields taken from the leader (publish_time,
+    top_image, type, country, paper). Each post_id keeps the row of its
+    smallest ``leader_id``, so the MERGE source holds one row per key and
+    the stored row does not depend on partitioning."""
     mp = metapost.build_metaposts(posts, baseurl=baseurl,
                                   start_time=start_time)
+    first_leader = Window.partitionBy("post_id").orderBy("leader_id")
+    mp = mp.withColumn("_rank", F.row_number().over(first_leader)) \
+        .where(F.col("_rank") == 1)
     summarized = mp.withColumn(
         "summary", summarize.summary_udf(F.col("member_text"))
     ).withColumn("caption", summarize.caption_udf(F.col("member_text")))
@@ -132,7 +141,7 @@ def _metapost_rows(posts: DataFrame, baseurl: str,
 
 
 def _n_linked() -> F.Column:
-    """Posts with siblings: one metapost row each."""
+    """Posts with siblings: one metapost upsert each."""
     return F.coalesce(F.sum((F.size("siblings") > 0).cast("long")),
                       F.lit(0)).alias("n")
 
@@ -154,11 +163,12 @@ def save_day(spark: SparkSession, posts_table: SnapshotTable, day: dt.date,
     the selected verbs' NLP columns of the day's posts (``update_cols`` =
     the union of their ``VERB_COLUMNS``, so a concurrent writer's other
     columns survive), then the metapost upsert, skipped when no post has
-    siblings. Returns rows written per verb: the day count for
-    similarity/summary, the metapost rows (one per post with siblings) for
-    metapost. ``field_names`` renames the computed NLP columns table-wide
-    (PostMeta analog — conf.build_posts_schema builds the matching table
-    schema)."""
+    siblings. Returns per verb: the day count for similarity/summary; for
+    metapost the reference's per-post upsert count, one per post with
+    siblings (nlp.py:250-265), though mutual siblings share one stored row
+    (``_metapost_rows``). ``field_names`` renames the computed NLP columns
+    table-wide (PostMeta analog — conf.build_posts_schema builds the
+    matching table schema)."""
     unknown = set(verbs) - set(VERB_COLUMNS)
     if unknown:
         raise KeyError(sorted(unknown)[0])

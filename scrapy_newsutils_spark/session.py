@@ -41,7 +41,8 @@ def _warmup(spark: SparkSession) -> None:
     try:
         df = spark.range(0, 4096, 1, 4).select(
             "id", (F.col("id") % 7).alias("k"),
-            F.concat(F.lit("w"), F.col("id").cast("string")).alias("s"))
+            # lower: the first case mapping in a JVM costs ~1.4 s
+            F.lower(F.concat(F.lit("W"), F.col("id").cast("string"))).alias("s"))
         w = Window.partitionBy("k").orderBy(F.col("id").desc())
         (df.withColumn("r", F.row_number().over(w)).where(F.col("r") <= 3)
            .groupBy("k").agg(F.count(F.lit(1)).alias("n"), F.min("s").alias("m"))
@@ -84,6 +85,9 @@ def get_spark(
     master defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, fallback ``local[*]``)
     so bench harnesses can pin parallelism. shuffle_partitions defaults to the
     core count — at cluster scale callers pass ~2-3x total cores instead.
+    The driver heap is ``$SPARK_DRIVER_MEMORY``, else half the physical
+    memory, at most 16g: a 16g heap on a host with ~15 GB of RAM got the
+    JVM OOM-killed.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
@@ -91,6 +95,8 @@ def get_spark(
     if shuffle_partitions is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         shuffle_partitions = int(cpus) if cpus else (os.cpu_count() or 8)
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    heap = os.environ.get("SPARK_DRIVER_MEMORY", f"{min(16 << 10, ram_mb // 2)}m")
 
     builder = (
         SparkSession.builder.master(master)
@@ -102,7 +108,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", heap)
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         # 16 MB: broadcast hash relations cost ~10x their serialized size in

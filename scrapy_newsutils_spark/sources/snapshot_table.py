@@ -235,7 +235,7 @@ class SnapshotTable:
             raise ValueError(
                 "adopt_parquet_dir is a bootstrap-only operation; table "
                 f"{self.path} is at version {self.current_version()} — "
-                "use append()/merge_upsert*() instead")
+                "use append()/merge_upsert_partitioned() instead")
         d = f"data-{uuid.uuid4().hex[:12]}"
         dst = os.path.join(self.path, d)
         os.makedirs(dst, exist_ok=True)
@@ -303,30 +303,6 @@ class SnapshotTable:
         return len([d for d in self.manifest().get("deletes", [])
                     if not d.get("warm")])
 
-    def merge_upsert(
-        self,
-        spark: SparkSession,
-        batch: DataFrame,
-        key_cols: list[str],
-        meta: dict | None = None,
-        expected_version: int | None = None,
-    ) -> int:
-        """Emulated ``MERGE INTO ... WHEN MATCHED UPDATE WHEN NOT MATCHED
-        INSERT``: existing rows whose key collides with the batch are
-        replaced by the batch row (batch wins), everything else is kept.
-
-        Mirrors the reference upsert sink ``Day.save``/``update_or_create``
-        (/root/reference/src/newsutils/crawl/day.py:103-156). The anti-join
-        shuffles on the key — identical shape to Iceberg CoW MERGE.
-        """
-        existing = self.read(spark)
-        batch = batch.select([f.name for f in self.schema.fields])
-        keep = existing.join(
-            batch.select(*key_cols).dropDuplicates(key_cols), on=key_cols, how="left_anti"
-        )
-        merged = keep.unionByName(batch.dropDuplicates(key_cols))
-        return self.overwrite(merged, meta, expected_version)
-
     def merge_upsert_partitioned(
         self,
         spark: SparkSession,
@@ -348,8 +324,8 @@ class SnapshotTable:
         the batch's distinct values, every other partition's files are
         byte-identical untouched (asserted in tests). The table must be
         written exclusively through this method (plus append/delete, which
-        preserve partition dirs); mixing with ``overwrite``/``merge_upsert``
-        resets it to unpartitioned.
+        preserve partition dirs); mixing with ``overwrite`` resets it to
+        unpartitioned.
 
         All touched partitions are merged and written in ONE Spark job via a
         ``partitionBy`` write (the round-2 version launched one job per

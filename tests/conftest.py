@@ -4,8 +4,8 @@ Parallelism is local[8] (the bench's N size); tests assert semantics that must
 be partitioning-invariant, so any fixed level works.
 
 The whole suite shares one JVM, so its heap is capped (``SPARK_DRIVER_MEMORY``,
-default 4g here instead of the engine's 16g: a 16g heap grows past what a
-host with ~15 GB of RAM has left next to the Python workers), and every test's
+default 4g here instead of the engine's half of the RAM: a larger heap grows
+past what a host with ~15 GB of RAM has left next to the Python workers), and every test's
 ``tmp_path`` is deleted when the test ends (crawl-engine tests write up to
 ~1.3 GB of fetched image payloads each, which would otherwise pile up for the
 whole session).

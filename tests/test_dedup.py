@@ -108,9 +108,9 @@ def test_build_partitioned_matches_exact(spark, tmp_path, frontier_df,
     exact = _keys(dedup.exact_new_urls(frontier_df, url_seen_df))
     n_seen = url_seen_df.count()
     sp = str(tmp_path / "bloom")
-    pf = dedup.build_partitioned(url_seen_df, sp,
-                                 cap_per_bucket=max(n_seen // 3, 8))
-    assert pf is not None and pf.buckets > 1  # the cap forced bucketing
+    meta = dedup.build_partitioned(url_seen_df, sp,
+                                   cap_per_bucket=max(n_seen // 3, 8))
+    assert meta is not None and meta["buckets"] > 1  # the cap forced bucketing
     new_s, maybe_s = dedup.split_by_filter_store(spark, frontier_df, sp)
     got = _keys(new_s) | _keys(dedup.exact_new_urls(maybe_s, url_seen_df))
     assert got == exact
@@ -127,15 +127,15 @@ def test_partitioned_filter_overfill_detected(spark, tmp_path):
         _keys_df(spark, rng.integers(0, 2**62, size=50, dtype=np.int64)), sp,
         buckets=2, expected=50)
     store = dedup.FilterStore(sp)
-    assert not store.load_meta_only().overfilled()
+    assert not dedup.overfilled(store.meta())
     dedup.store_apply_keys(
         spark, _keys_df(spark, rng.integers(0, 2**62, size=200,
                                             dtype=np.int64)), sp)
-    assert not store.load_meta_only().overfilled()
+    assert not dedup.overfilled(store.meta())
     dedup.store_apply_keys(
         spark, _keys_df(spark, rng.integers(0, 2**62, size=4000,
                                             dtype=np.int64)), sp)
-    assert store.load_meta_only().overfilled()
+    assert dedup.overfilled(store.meta())
 
 
 def test_build_partitioned_store_direct_write(spark, tmp_path, frontier_df,
@@ -145,13 +145,13 @@ def test_build_partitioned_store_direct_write(spark, tmp_path, frontier_df,
     back only counters (the 10^10 path — 800 x 32 MB buckets must not be
     collected). The store probe must equal the plain anti-join."""
     sp = str(tmp_path / "filters")
-    pf = dedup.build_partitioned(url_seen_df, sp,
-                                 cap_per_bucket=max(url_seen_df.count() // 3, 8))
-    assert pf is not None and pf.buckets > 1
+    meta = dedup.build_partitioned(
+        url_seen_df, sp, cap_per_bucket=max(url_seen_df.count() // 3, 8))
+    assert meta is not None and meta["buckets"] > 1
     # metadata-only on the driver: counters, no filter arrays
-    assert not any(isinstance(v, np.ndarray) for v in vars(pf).values())
+    assert not any(isinstance(v, np.ndarray) for v in meta.values())
     files = set(os.listdir(sp))
-    for bv in pf.inserted:
+    for bv in map(int, meta["inserted"]):
         assert f"bucket-{bv:06d}.npz" in files
         assert f"bucket-{bv:06d}.keys-00000000.npy" in files
     new_s, maybe_s = dedup.split_by_filter_store(spark, frontier_df, sp)
@@ -180,13 +180,13 @@ def test_build_partitioned_scale_memory_budget(spark, tmp_path):
     cap = max(n // 5, 1024)
     seen = spark.range(0, n).select(F.xxhash64("id").alias("url_key"))
     sp = str(tmp_path / "filters")
-    pf = dedup.build_partitioned(seen, sp, expected=n, cap_per_bucket=cap)
-    assert pf.buckets == dedup.pick_buckets(n, cap)  # uncapped layout
-    assert sum(pf.inserted.values()) == n
+    meta = dedup.build_partitioned(seen, sp, expected=n, cap_per_bucket=cap)
+    assert meta["buckets"] == dedup.pick_buckets(n, cap)  # uncapped layout
+    assert sum(meta["inserted"].values()) == n
     # fixed per-task budget: 8 B/key for the task's bucket + filter bits +
     # python-worker baseline. 10^8/10 buckets -> ~80 MB keys; observed
     # ~760 MB total incl. worker overhead. 28 B/boxed-key would need >2 GB.
-    assert pf.build_rss_mb < 1600, pf.build_rss_mb
+    assert meta["build_rss_mb"] < 1600, meta["build_rss_mb"]
     # membership exactness on a sample: no built key reads definitely-new
     _, maybe = dedup.split_by_filter_store(spark, seen.limit(2000), sp)
     assert maybe.count() == 2000
@@ -198,9 +198,9 @@ def test_store_apply_keys_executor_side(spark, tmp_path, url_seen_df):
     from pyspark.sql import functions as F
 
     sp = str(tmp_path / "filters")
-    pf = dedup.build_partitioned(url_seen_df, sp,
-                                 cap_per_bucket=max(url_seen_df.count() // 3, 8))
-    assert pf.buckets > 1
+    meta = dedup.build_partitioned(
+        url_seen_df, sp, cap_per_bucket=max(url_seen_df.count() // 3, 8))
+    assert meta["buckets"] > 1
     extra = spark.range(1_000_000, 1_000_400).select(
         F.xxhash64("id").alias("url_key"))
     added = dedup.store_apply_keys(spark, extra, sp)
@@ -342,5 +342,5 @@ def test_store_meta_writes_are_atomic(spark, tmp_path, url_seen_df,
     assert sum(added.values()) == 50
     store = dedup.FilterStore(sp)
     store.stamp_source(7)
-    assert store.source_version() == 7
+    assert store.meta()["source_version"] == 7
     assert sum(store.meta()["inserted"].values()) == url_seen_df.count() + 50

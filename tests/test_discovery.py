@@ -265,11 +265,24 @@ def test_discovery_store_mode_matches_exact(spark, tmp_path, frontier_df,
     engine's (use_bloom=False) state EXACTLY — including post-compaction
     priorities, which fold the lazily-queued OPIC cash (the sidecar's
     stale-present keys route dead cash into cash_t; compaction's left join
-    must drop it)."""
+    must drop it). Before the last epoch every bucket of both stores is
+    set one key past its design capacity: that epoch rebuilds both with
+    more buckets and still ends in the exact engine's state."""
     a = _run_disco(spark, str(tmp_path / "a"), frontier_df, images_df,
                    robots_df, url_seen_df, use_bloom=False, compact_every=2)
     b = _run_disco(spark, str(tmp_path / "b"), frontier_df, images_df,
-                   robots_df, url_seen_df, compact_every=2)
+                   robots_df, url_seen_df, compact_every=2, epochs=2)
+    stores = [dedup.FilterStore(f.path)
+              for f in (b.url_seen_filter, b.frontier_filter)]
+    buckets = []
+    for st in stores:
+        meta = st.meta()
+        buckets.append(meta["buckets"])
+        meta["capacity"] = {bv: n - 1 for bv, n in meta["inserted"].items()}
+        st.write_meta(meta)
+    b.run(1)
+    for st, n in zip(stores, buckets):
+        assert st.meta()["buckets"] > n, (st.path, n)
     for attr in ("frontier_t", "url_seen_t", "fetched_t"):
         ka = sorted(r["url_key"] for r in
                     getattr(a, attr).read(spark).select("url_key").collect())
@@ -303,7 +316,7 @@ def test_discovery_sidecar_probe_no_frontier_scan(spark, tmp_path,
     out = spark.createDataFrame([(int(k),) for k in probe_keys],
                                 "url_key long")
     tagged = dedup.tag_by_filter_store(
-        spark, out, eng._frontier_filter_dir(), exact=True)
+        spark, out, eng.frontier_filter.path, exact=True)
     assert not any("/frontier/" in f for f in tagged.inputFiles())
     got = {r["url_key"]: r["_maybe"] for r in tagged.collect()}
     for k in probe_keys:
@@ -423,7 +436,7 @@ def test_resume_rebuilds_store_of_another_kind(spark, tmp_path, frontier_df,
                    robots_df, url_seen_df, use_bloom=False, epochs=3)
     b = _run_disco(spark, str(tmp_path / "kb"), frontier_df, images_df,
                    robots_df, url_seen_df, epochs=2)
-    store_dirs = {b._filter_store_dir(), b._frontier_filter_dir()}
+    store_dirs = {b.url_seen_filter.path, b.frontier_filter.path}
     del b
     for d in store_dirs:
         st = dedup.FilterStore(d)

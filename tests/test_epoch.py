@@ -188,11 +188,11 @@ def test_expire_seen_recrawl_ttl(spark, tmp_path, frontier_df, images_df,
     assert n_before > 0
 
     def filter_hit_share(exact: bool) -> float:
-        tagged = DD.tag_by_filter_store(spark, seen, eng._filter_store_dir(),
+        tagged = DD.tag_by_filter_store(spark, seen, eng.url_seen_filter.path,
                                         exact=exact)
         return tagged.where("_maybe").count() / n_before
 
-    eng._get_bloom()
+    eng.url_seen_filter.ensure()
     # the approximate filter alone (exact=False) holds every seen key
     assert filter_hit_share(exact=False) == 1.0
 
@@ -200,8 +200,8 @@ def test_expire_seen_recrawl_ttl(spark, tmp_path, frontier_df, images_df,
     assert dropped == n_before
     assert eng.url_seen_t.count(spark) == 0
     # Bloom can't forget: the store is dropped and rebuilt from the table
-    assert eng._filter is None
-    eng._get_bloom()
+    assert not eng.url_seen_filter.live
+    eng.url_seen_filter.ensure()
     assert filter_hit_share(exact=True) == 0.0
 
     # a re-seen URL survives the old delete delta

@@ -70,7 +70,7 @@ def test_store_probe_engine_matches_exact_engine(spark, tmp_path,
     eng.run(1)
     eng.url_seen_t.append(orphan, meta={"epoch": 2})
     dedup.store_apply_keys(spark, orphan.select("url_key"),
-                           eng._filter_store_dir(), seq=2)
+                           eng.url_seen_filter.path, seq=2)
     resumed = mk("store")
     resumed.run(1)
     for attr in ("frontier_t", "url_seen_t", "fetched_t"):
@@ -132,9 +132,9 @@ def test_store_mode_zero_driver_key_materialization(spark, tmp_path, frontier_df
     res = eng.run(2)
     assert res[0].popped > 0 and res[0].fetched_ok > 0
     # the driver holds only metadata — no filter bytes
-    assert eng._filter is not None
+    assert eng.url_seen_filter.live
     assert not any(isinstance(v, np.ndarray)
-                   for v in vars(eng._filter).values())
+                   for v in vars(eng.url_seen_filter).values())
 
 
 def test_store_mode_steady_state_never_scans_url_seen(spark, tmp_path,

@@ -80,7 +80,17 @@ def test_nlp_day_job(spark, posts_table):
     dates = pipeline.parse_dates("2024-03-01", "2024-03-05")
     posts_pipeline.process_crawl_batch(spark, batch, posts_table, dates)
 
-    out = nlp_job.save_day(spark, posts_table, DAY0)
+    def save_day(shuffle_partitions):
+        prev = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        try:
+            # the fixture day's posts are siblings only below the default 0.4
+            return nlp_job.save_day(spark, posts_table, DAY0,
+                                    siblings_threshold=0.25)
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+    out = save_day(1)
     assert out["similarity"] > 0 and out["summary"] > 0
 
     day_rows = posts_table.read(spark).where(
@@ -90,17 +100,29 @@ def test_nlp_day_job(spark, posts_table):
     assert plain.where(F.col("summary").isNull()).count() == 0
     assert plain.where(F.col("category").isNull()).count() == 0
 
-    # metapost rows exist iff some post has siblings; version deterministic
-    n_with_sibs = plain.where(F.size("siblings") > 0).count()
+    # one metapost upsert per post with siblings; mutual siblings share the
+    # version hash, so each cluster stores one row
+    leaders = plain.where(F.size("siblings") > 0).collect()
+    clusters = {frozenset([r["post_id"], *(s["post_id"] for s in r["siblings"])])
+                for r in leaders}
     metas = day_rows.where(F.col("type").startswith("metapost"))
-    assert metas.count() == out["metapost"] == n_with_sibs
+    assert out["metapost"] == len(leaders) == 6
+    assert metas.count() == len(clusters) == 2
+    cols = [c for c in metas.columns if c != "created_ts"]
 
-    # re-running the whole day job is idempotent on row count
-    out2 = nlp_job.save_day(spark, posts_table, DAY0)
-    assert out2["metapost"] == out["metapost"]
+    def meta_rows(df):
+        return sorted(df.select(cols).collect(), key=lambda r: r["post_id"])
+
+    stored = meta_rows(metas)
+
+    # re-running the whole day job is idempotent on row count, and the
+    # metapost rows computed at 16 shuffle partitions equal those at 1
+    out2 = save_day(16)
+    assert out2 == out
     day2 = posts_table.read(spark).where(
         F.to_date("publish_time") == DAY0.isoformat())
     assert day2.count() == day_rows.count()
+    assert meta_rows(day2.where(F.col("type").startswith("metapost"))) == stored
 
 
 def test_day_posts_scans_only_day_partition(spark, posts_table):

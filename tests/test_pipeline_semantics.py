@@ -137,10 +137,13 @@ def test_route_then_upsert_roundtrip(spark, tmp_path, posts_df):
 
     batch, existing = _edit_fixture(spark, posts_df)
     table = SnapshotTable(str(tmp_path / "posts"), schemas.POSTS)
-    table.overwrite(existing)
+    table.overwrite(spark.createDataFrame([], schemas.POSTS))
+    day = F.to_date("publish_time")
+    table.merge_upsert_partitioned(spark, existing, ["post_id"], day)
     routed = edits.route_edits(edits.classify_edits(batch, existing))
-    table.merge_upsert(spark, routed.select([f.name for f in schemas.POSTS.fields]),
-                       key_cols=["post_id"])
+    table.merge_upsert_partitioned(
+        spark, routed.select([f.name for f in schemas.POSTS.fields]),
+        key_cols=["post_id"], part_expr=day)
     final = table.read(spark)
     assert final.where(F.col("short_link") == "/post/2").count() == 2  # v1 + v2
     v3 = final.where(F.col("short_link") == "/post/3")

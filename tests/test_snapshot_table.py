@@ -63,8 +63,12 @@ def test_append_preserves_deletes(spark, table):
 
 
 def test_merge_upsert(spark, table):
-    table.overwrite(_df(spark, [(1, "old"), (2, "keep")]))
-    table.merge_upsert(spark, _df(spark, [(1, "new"), (3, "ins")]), ["k"])
+    part = F.col("k") % 2
+    table.overwrite(_df(spark, []))
+    table.merge_upsert_partitioned(
+        spark, _df(spark, [(1, "old"), (2, "keep")]), ["k"], part)
+    table.merge_upsert_partitioned(
+        spark, _df(spark, [(1, "new"), (3, "ins")]), ["k"], part)
     got = {r["k"]: r["v"] for r in table.read(spark).collect()}
     assert got == {1: "new", 2: "keep", 3: "ins"}
 
